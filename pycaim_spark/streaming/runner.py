@@ -55,10 +55,13 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     (VERDICT r18 #3). The default ``spark.sql.shuffle.partitions`` tracks
     the core count, and every stateful micro-batch — including the no-data
     finalize batch availableNow always appends — pays a state-store
-    open/commit per partition (~27 ms each on this box per the r18
-    StreamingQueryProgress decomposition), so the cost scaled with CORES,
-    not data: the r18 driver's own scaling block read stream_watermark_agg
-    at 0.29 (8 cores 3.4× faster than 32 on identical code).
+    open/commit per partition (~27 ms each at 32 cores, OPTIMIZATION_r18.md's
+    StreamingQueryProgress decomposition of stream_watermark_agg), so the
+    cost scaled with CORES, not data: the r18 driver's scaling block read
+    stream_watermark_agg at 0.29 (8 cores 3.4× faster than 32 on identical
+    code). Evidence for the sizing rule below: ISOLATE_r19.json
+    `stream_state_partitions_series` and
+    `stream_state_partitions_core_scaling`.
 
     Sizing rule: one state partition per ~32 MiB of source input — the
     watermark bounds live state to a fraction of in-flight input, so

@@ -396,69 +396,156 @@ def test_minhash_wide_bucket_star_degradation(spark):
     assert any(r.id_a == 2000 and r.id_b == 2001 for r in pair_rows)
 
 
-def test_guard_shapes_equivalent(spark, monkeypatch):
-    """The A/B'd guard plan shapes (window / join / anti / nopart /
-    grouped / grouped_unbounded — see
-    ISOLATE_r8.json, ISOLATE_r9.json and operators/dedup.py) are pure physical-plan
-    variants: on a corpus mixing a wide clique with narrow near-dups they
-    must return EXACTLY the same pairs and wide-bucket stats."""
+def _star_rule_pairs(bucket_rows, cap):
+    """Pure-Python reference for the dense-clique guard: ``bucket_rows``
+    is an iterable of (bucket_key, id). All pairs inside buckets of width
+    ≤ ``cap``; beyond the cap, star pairs (bucket min id, member). Returns
+    (pairs, {bucket_key: width} of the wide buckets)."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    buckets = defaultdict(set)
+    for key, i in bucket_rows:
+        buckets[key].add(i)
+    pairs, wide = set(), {}
+    for key, ids in buckets.items():
+        ids = sorted(ids)
+        if len(ids) <= cap:
+            pairs.update(combinations(ids, 2))
+        else:
+            wide[key] = len(ids)
+            pairs.update((ids[0], j) for j in ids[1:])
+    return pairs, wide
+
+
+def _round6(x: float) -> float:
+    """Spark's F.round(double, 6): HALF_UP on the decimal rendering."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_guard_shapes_equivalent(spark):
+    """The shipped clique guard (operators/dedup.py
+    `_banded_pairs_with_guard`) against a pure-Python STAR rule on a
+    corpus mixing a wide clique with narrow near-dups: the minhash and
+    simhash pairs, and the wide-bucket stats, equal the reference exactly.
+    The bucket keys come from the operators' own band rows; the guard,
+    pairing, dedup and distance filters are recomputed here."""
     from pycaim_spark.operators.dedup import (
+        _band_rows,
+        _shingle_sets,
         minhash_candidate_pairs,
         simhash_candidate_pairs,
+        with_simhash,
     )
 
+    cap = 64
     clique = "the same boilerplate sentence repeated across mirrors forever"
     rows = [(i, clique) for i in range(300)] + [
         (900, "outside control document with completely unrelated tokens"),
         (901, "outside control document with completely unrelated words"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    results, sim_results = {}, {}
-    shapes = ("window", "join", "anti", "nopart", "grouped",
-              "grouped_unbounded")
-    for shape in shapes:
-        monkeypatch.setenv("PYCAIM_LSH_GUARD_SHAPE", shape)
-        pairs, wide = minhash_candidate_pairs(
-            docs, max_bucket_width=64, return_wide_buckets=True
-        )
-        results[shape] = (
-            {(r.id_a, r.id_b) for r in pairs.collect()},
-            {(r.table_id, r.mh, r.width) for r in wide.collect()},
-        )
-        sim_pairs = simhash_candidate_pairs(docs, max_bucket_width=64)
-        sim_results[shape] = {
-            (r.id_a, r.id_b, r.hamming) for r in sim_pairs.collect()
-        }
-    assert all(results[s] == results["window"] for s in shapes)
-    assert results["window"][0], "planted near-dups must be found"
-    assert all(sim_results[s] == sim_results["window"] for s in shapes)
-    assert sim_results["window"]
+
+    # MinHash: STAR rule over the (table_id, mh) band buckets, then the
+    # exact-Jaccard cut (jaccard_dist ≤ 0.8 after 6dp rounding).
+    base = _shingle_sets(docs, "text", "doc_id", 3, repartition=False)
+    sets = {r.id: set(r.hs) for r in base.collect()}
+    bands = _band_rows(base, 8, 42).collect()
+    cand, wide_ref = _star_rule_pairs(
+        (((r.table_id, r.mh), r.id) for r in bands), cap
+    )
+
+    def _jd(a, b):
+        inter = len(sets[a] & sets[b])
+        return _round6(1.0 - inter / (len(sets[a]) + len(sets[b]) - inter))
+
+    want = {(a, b) for a, b in cand if _jd(a, b) <= 0.8}
+    pairs, wide = minhash_candidate_pairs(
+        docs, max_bucket_width=cap, return_wide_buckets=True
+    )
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == want
+    assert {((r.table_id, r.mh), r.width) for r in wide.collect()} == set(
+        wide_ref.items()
+    )
+    assert (900, 901) in want, "planted near-dups must be found"
+    assert wide_ref, "the clique must degrade to star pairing"
+
+    # SimHash: 8 bands of 8 bits over the 64-bit signature, STAR rule per
+    # (band_id, band_val) bucket, then the Hamming cut (≤ 7).
+    sig = {
+        r.doc_id: r.simhash & (2**64 - 1)
+        for r in with_simhash(docs).select("doc_id", "simhash").collect()
+    }
+    sim_cand, _ = _star_rule_pairs(
+        (((b, (s >> (8 * b)) & 0xFF), i)
+         for i, s in sig.items() for b in range(8)),
+        cap,
+    )
+    ham = {(a, b): bin(sig[a] ^ sig[b]).count("1") for a, b in sim_cand}
+    sim_want = {(a, b, h) for (a, b), h in ham.items() if h <= 7}
+    sim_pairs = simhash_candidate_pairs(docs, max_bucket_width=cap)
+    assert {
+        (r.id_a, r.id_b, r.hamming) for r in sim_pairs.collect()
+    } == sim_want
+    assert sim_want
 
 
-def test_sim_guard_shapes_equivalent(spark, monkeypatch):
-    """The four sign-LSH guard shapes (window/nopart/single/dual — see
-    ISOLATE_r8.json and operators/similarity.py) must return identical
-    (vec_a, vec_b, cos) sets on a corpus with a planted wide clique."""
+def test_sim_guard_shapes_equivalent(spark):
+    """The shipped sign-LSH neighbors (operators/similarity.py
+    `bucketed_cosine_neighbors`) against a NumPy reference applying the
+    same bucket, star and ``min_cos`` rule, on a corpus with a planted
+    wide clique: identical (vec_a, vec_b) sets, cosines to the 6dp the
+    operator rounds to."""
     import numpy as np
 
-    from pycaim_spark.operators.similarity import bucketed_cosine_neighbors
+    from pycaim_spark.operators.similarity import (
+        bucketed_cosine_neighbors,
+        random_hyperplanes,
+    )
 
+    n_planes, n_tables, dim, seed, min_cos, cap = 4, 8, 64, 42, 0.3, 16
     rng = np.random.default_rng(7)
-    base = rng.standard_normal(64)
-    rows = [(i, (base + rng.standard_normal(64) * 0.01).tolist())
-            for i in range(80)]  # wide replica clique (cap below is 16)
-    rows += [(200 + i, rng.standard_normal(64).tolist()) for i in range(40)]
+    base = rng.standard_normal(dim)
+    rows = [(i, (base + rng.standard_normal(dim) * 0.01).tolist())
+            for i in range(80)]  # wide replica clique (cap is 16)
+    rows += [(200 + i, rng.standard_normal(dim).tolist()) for i in range(40)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {}
-    for shape in ("window", "nopart", "single", "dual"):
-        monkeypatch.setenv("PYCAIM_SIM_GUARD_SHAPE", shape)
-        pairs = bucketed_cosine_neighbors(
-            emb, n_planes=4, n_tables=8, dim=64, min_cos=0.3,
-            max_bucket_width=16,
-        )
-        out[shape] = {(r.vec_a, r.vec_b, r.cos) for r in pairs.collect()}
-    assert out["window"] == out["nopart"] == out["single"] == out["dual"]
-    assert out["window"], "planted clique must produce pairs"
+
+    ids = np.array([r[0] for r in rows])
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    planes = np.vstack(
+        [random_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    )
+    bits = (mat @ planes.T) >= 0
+    weights = 1 << np.arange(n_planes)
+    sigs = bits.reshape(len(mat), n_tables, n_planes) @ weights
+    cand, wide = _star_rule_pairs(
+        (((t, int(sigs[k, t])), int(ids[k]))
+         for k in range(len(ids)) for t in range(n_tables)),
+        cap,
+    )
+    vec = {int(i): v for i, v in zip(ids, mat)}
+
+    def _dot(x, y):  # left fold in index order, like the operator's
+        return sum(float(p) * float(q) for p, q in zip(x, y))
+
+    def _cos(a, b):
+        va, vb = vec[a], vec[b]
+        norms = np.sqrt(_dot(va, va)) * np.sqrt(_dot(vb, vb))
+        return _round6(_dot(va, vb) / norms)
+
+    want = {(a, b): c for a, b in cand if (c := _cos(a, b)) >= min_cos}
+    pairs = bucketed_cosine_neighbors(
+        emb, n_planes=n_planes, n_tables=n_tables, dim=dim, seed=seed,
+        min_cos=min_cos, max_bucket_width=cap,
+    )
+    got = {(r.vec_a, r.vec_b): r.cos for r in pairs.collect()}
+    assert set(got) == set(want)
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in want)
+    assert wide, "the clique must degrade to star pairing"
+    assert want, "planted clique must produce pairs"
 
 
 def test_dedup_minhash_stats_counts_planted_clique(spark, tmp_path):

@@ -98,3 +98,28 @@ def test_missing_sf_dir_raises_clean_path_error(spark):
 
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND|Path does not exist"):
         load_table(spark, "/root/testdata/sf_nope", "events").count()
+
+
+def test_engine_env_surface_is_pinned():
+    """Every ``PYCAIM_*`` name the engine reads or documents. Each
+    operator ships one plan shape (ROADMAP aim 2): a decided A/B arm is
+    deleted, not kept behind an env switch, so a new name here has to be
+    added to this list on purpose."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pycaim_spark"
+    names = {
+        m
+        for path in root.rglob("*.py")
+        for m in re.findall(r"PYCAIM_[A-Z0-9_]+", path.read_text())
+    }
+    assert names == {
+        "PYCAIM_" + n
+        for n in (
+            "ALLPAIRS_MAX_ROWS", "DRIVER_MEM", "EXTRA_CONFS",
+            "LAYOUT_GC_GRACE", "LSH_MAX_BUCKET", "MAX_PARTITION_BYTES",
+            "SCRATCH", "SIM_LSH_TABLES", "STORE_GC_GRACE", "STORE_GC_KEEP",
+            "STREAM_STATE_PARTITIONS",
+        )
+    }

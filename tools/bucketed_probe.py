@@ -4,7 +4,7 @@ bucketed-scan floor → +SMJ → +aggregate → full). Stages run over the
 persisted orderkey-bucketed layout, warm + median-of-3, noop sink. One
 process: numbers are stage-RELATIVE decomposition evidence; arm DECISIONS
 (semi/bloom vs shipped) go through the order-alternating fresh-JVM paired
-series (tools/query_ab_series.py), per CLAUDE.md measurement rules.
+series (tools/ab_series.py), per CLAUDE.md measurement rules.
 
 q10 extra arms:
   semi  — broadcast left-semi of the quarter-filtered orderkeys into the
@@ -218,19 +218,7 @@ def _stages(spark, lib, ob, sf_dir):
             .orderBy(F.desc("numwait"), "s_name")
         )
         # r14: the registry default flipped to the window form, so "full"
-        # IS window_full (kept as a sanity pair); diamond_full probes the
-        # demoted two-aggregate arm for the recompute comparison.
-        from pycaim_spark.queries.tpch_more import (
-            _q21_two_aggregate_qualifying,
-        )
-        qualifying_d = _q21_two_aggregate_qualifying(per_supp)
-        diamond_full = (
-            qualifying_d.join(
-                F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-            .groupBy("s_name")
-            .agg(F.sum("n_late_rows").alias("numwait"))
-            .orderBy(F.desc("numwait"), "s_name")
-        )
+        # IS window_full (kept as a sanity pair).
         from pycaim_spark.registry import REGISTRY as R
         return {
             "scan_li": lib.select("l_orderkey", "l_suppkey", "l_shipdate"),
@@ -240,7 +228,6 @@ def _stages(spark, lib, ob, sf_dir):
             "per_order": per_order,
             "full": R["tpch_q21_bucketed"].fn(spark, sf_dir),
             "window_full": window_full,
-            "diamond_full": diamond_full,
         }
     raise SystemExit(f"unknown query {QUERY}")
 
