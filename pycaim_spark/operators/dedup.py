@@ -12,12 +12,13 @@
 from __future__ import annotations
 
 import os
-import time
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from pycaim_spark.operators import snapshot
 
 try:
     from pyspark import cloudpickle as _cloudpickle
@@ -771,6 +772,23 @@ def incremental_cluster_assignments(
     return delta_rows.unionByName(remap_rows)
 
 
+#: The signature store's on-disk shape (commit protocol:
+#: operators/snapshot.py). Base ``sets_v{N}`` (id, hs — hashed shingle
+#: sets for exact-Jaccard verification) and ``buckets_v{N}`` (table_id,
+#: mh, width, ids — the LSH band index pre-aggregated per bucket) behind
+#: ``current.json`` = ``{"version": N, "folded": [...], "del_folded":
+#: [...]}``; append layers ``append/<key>/{sets,bands}`` hold raw band
+#: rows (the LSM log), delete layers ``deletes/<key>/ids``.
+SIG_STORE = snapshot.Store(
+    "current.json",
+    ("sets", "buckets"),
+    (
+        snapshot.Layers("append", "bands", "folded", always=True),
+        snapshot.Layers("deletes", "ids", "del_folded"),
+    ),
+)
+
+
 def minhash_signature_store_build(
     base_docs: DataFrame,
     store_dir: str,
@@ -781,50 +799,33 @@ def minhash_signature_store_build(
     seed: int = 42,
 ) -> None:
     """Build (or reuse) a PERSISTED minhash signature store for an
-    existing corpus: ``sets_v{N}/`` (id, hs — the hashed shingle sets,
-    for exact-Jaccard verification) and ``buckets_v{N}/`` (table_id, mh,
-    width, ids — the LSH band index pre-aggregated into per-bucket
-    member arrays by ``_band_buckets``, so a probe joins one row per
-    bucket and never expands per-collision rows), committed behind the
-    ``current.json`` snapshot pointer (r16). Idempotent: if the pointed-
-    to version's parquet dirs carry a _SUCCESS marker the build is
-    skipped — the deployment shape,
-    where the corpus's text is shingled ONCE and every daily delta
-    probes the store without touching base text again. After each ingest
-    the accepted delta's signatures are appended as band-row deltas and
-    folded into the bucket arrays at the periodic compaction (at 100 TB:
-    partition the store by ingest date — the LSM pattern).
-    """
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        ptr = _load_pointer(store_dir)
-        if ptr is not None:
-            sets_dir = _versioned(store_dir, "sets", ptr["version"])
-            buckets_dir = _versioned(store_dir, "buckets", ptr["version"])
-            if os.path.exists(
-                os.path.join(sets_dir, "_SUCCESS")
-            ) and os.path.exists(os.path.join(buckets_dir, "_SUCCESS")):
-                return
-        # Fresh build (or a corrupted current version — rebuild beside
-        # it): write the base under the NEXT version and commit by
-        # pointer flip, folded reset to the passed corpus's truth.
-        v = ptr["version"] + 1 if ptr is not None else 0
-        sets_dir = _versioned(store_dir, "sets", v)
-        buckets_dir = _versioned(store_dir, "buckets", v)
-        b_sets = _shingle_sets(
+    existing corpus (``SIG_STORE``), so the corpus's text is shingled
+    ONCE and every daily delta probes the store without touching base
+    text again. Idempotent: a committed version whose base dirs carry
+    ``_SUCCESS`` is reused. Otherwise the base is written as the next
+    version and committed as a REBUILD: the store then holds exactly
+    ``base_docs``, so every live append and delete layer is retired and
+    the manifests restart empty. Accepted deltas are appended as layers
+    and folded into the bucket arrays by the periodic compaction (at
+    100 TB: partition the store by ingest date — the LSM pattern)."""
+    with snapshot.write_lock(store_dir):
+        SIG_STORE.reconcile(store_dir)
+        if SIG_STORE.built(store_dir):
+            return
+        v = SIG_STORE.next_version(store_dir)
+        sets_dir = SIG_STORE.version_dir(store_dir, "sets", v)
+        _shingle_sets(
             base_docs, text_col, id_col, shingle_n, repartition=False
-        )
-        b_sets.write.mode("overwrite").parquet(sets_dir)
+        ).write.mode("overwrite").parquet(sets_dir)
         spark = base_docs.sparkSession
         (
             _band_buckets(
                 _band_rows(spark.read.parquet(sets_dir), num_hashes, seed)
             )
             .write.mode("overwrite")
-            .parquet(buckets_dir)
+            .parquet(SIG_STORE.version_dir(store_dir, "buckets", v))
         )
-        _commit_pointer(store_dir, v, [])
+        SIG_STORE.rebuild(store_dir, v)
 
 
 def incremental_minhash_dedup_stored(
@@ -845,18 +846,17 @@ def incremental_minhash_dedup_stored(
     index and shingle sets stream map-side against the broadcast delta.
     Same probe, same verdicts as ``incremental_minhash_dedup`` (asserted
     in tests/test_llm_ops.py); what changes is what the run touches.
-    Read-only: resolves a consistent view even of a mid-swap store
-    (``_store_read_view``) instead of mutating it (ADVICE r10)."""
+    Read-only: resolves the committed snapshot (``_store_read_view``)."""
     sets_path, buckets_path, _ = _store_read_view(store_dir)
     b_sets = spark.read.parquet(sets_path)
     store_buckets = spark.read.parquet(buckets_path)
-    # Pending deletions (r18) apply logically, in two layers: the
-    # sets-side anti-join guarantees a deleted id never VERIFIES as a
-    # match, and the pre-cap candidate filter (deleted_ids) keeps a
-    # deleted id from occupying a capped candidate slot that would
-    # displace a genuine near-duplicate until compaction. Broadcast/
-    # literal-bounded by deletes since the last compaction.
-    dels = _store_deleted_ids(spark, store_dir)
+    # Pending deletions apply logically, in two layers: the sets-side
+    # anti-join guarantees a deleted id never VERIFIES as a match, and
+    # the pre-cap candidate filter (deleted_ids) keeps a deleted id from
+    # occupying a capped candidate slot that would displace a genuine
+    # near-duplicate until compaction. Broadcast/literal-bounded by
+    # deletes since the last compaction.
+    dels = SIG_STORE.deleted_ids(spark, store_dir, "deletes")
     if dels is not None:
         b_sets = b_sets.join(F.broadcast(dels), "id", "left_anti")
     return _incremental_probe(
@@ -864,40 +864,6 @@ def incremental_minhash_dedup_stored(
         num_hashes, max_jaccard_dist, seed, max_candidates_per_doc,
         deleted_ids=_deleted_ids_for_probe(dels),
     )
-
-
-def _store_delete_dirs(store_dir: str) -> list[str]:
-    """Live DELETE layers (r18): ``deletes/<key>/ids`` parquet dirs,
-    complete (``ids/_SUCCESS``) and not tombstoned — same liveness rule
-    as the append layers, same write-aside swap scaffolding exclusions."""
-    del_dir = os.path.join(store_dir, "deletes")
-    if not os.path.isdir(del_dir):
-        return []
-    return sorted(
-        os.path.join(del_dir, k)
-        for k in os.listdir(del_dir)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(del_dir, k, "ids", "_SUCCESS"))
-        and not os.path.exists(
-            os.path.join(del_dir, k, "superseded.json")
-        )
-    )
-
-
-def _store_deleted_ids(spark, store_dir: str):
-    """The union of every live delete layer's ids as a one-column
-    ``id`` DataFrame, or None when no deletes are pending. Bounded by
-    deletions since the last compaction (compaction applies them
-    physically and retires the layers), so probes can broadcast it."""
-    dirs = _store_delete_dirs(store_dir)
-    if not dirs:
-        return None
-    out = None
-    for d in dirs:
-        ids = spark.read.parquet(os.path.join(d, "ids"))
-        out = ids if out is None else out.unionByName(ids)
-    return out.distinct()
 
 
 #: Above this many pending deleted ids the probes skip the exact
@@ -920,16 +886,6 @@ def _deleted_ids_for_probe(dels) -> list[int] | None:
     return [r.id for r in rows]
 
 
-def _store_del_manifest(store_dir: str) -> list[str]:
-    """Delete keys already APPLIED by a compaction, in fold order —
-    the replay-idempotency manifest for deletions, carried inside the
-    snapshot pointer (``del_folded``) like the append manifest."""
-    ptr = _load_pointer(store_dir)
-    if ptr is not None:
-        return list(ptr.get("del_folded", ()))
-    return []
-
-
 def minhash_signature_store_delete(
     spark,
     store_dir: str,
@@ -937,86 +893,50 @@ def minhash_signature_store_delete(
     delete_key: str,
     id_col: str = "doc_id",
 ) -> None:
-    """DELETE documents from a persisted signature store (r18) — the
-    right-to-be-forgotten motion a production corpus needs: after this
-    commit, deleted docs are never again returned as dedup targets, and
-    a new document identical to a deleted one is NOVEL.
+    """DELETE documents from a persisted signature store — the
+    right-to-be-forgotten motion: after this commit, deleted docs are
+    never again returned as dedup targets, and a new document identical
+    to a deleted one is NOVEL.
 
-    LSM shape, mirroring the append path: the ids land as a DELETE
-    LAYER ``deletes/<key>/ids`` (write-aside + rename swap, ADVICE r15
-    discipline — a redelivered key never mutates files a lockless
-    reader resolved). Probes apply live delete layers LOGICALLY in two
-    interlocking layers: the sets-side anti-join guarantees a deleted
-    id never VERIFIES as a match, and the pre-cap candidate filter
-    (`_incremental_matches` ``deleted_ids``) removes deleted ids from
-    the stored bucket arrays BEFORE the per-doc candidate cap, so a
-    deleted id cannot displace a genuine near-duplicate out of the
-    capped prefix. Past `_DELETE_CANDIDATE_FILTER_MAX` pending ids the
-    second layer falls back to slot-loss-until-compaction (documented
-    approximation; verification correctness is never affected — run
-    the compaction). The next compaction
-    applies deletions PHYSICALLY — sets rows dropped, bucket member
-    arrays filtered — retires the layers (two-phase tombstone+grace),
-    and records the key in the pointer's ``del_folded`` manifest so a
-    replayed delete is a no-op, the same batch-key discipline as every
-    other sink in the repo. Idempotent before compaction too: the
-    layer is keyed, and deletion is monotone.
-
-    Deleting an id that was never in the store is a harmless no-op
-    row. Cost: O(delete batch) now, O(store) at the next compaction
-    (the physical pass — at 100 TB the same rewrite a table-format
-    purge pays)."""
-    import shutil
-
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        if delete_key in _store_del_manifest(store_dir):
+    The ids land as the keyed delete layer ``deletes/<key>/ids``
+    (write-aside, so a redelivered key never mutates files a lockless
+    reader resolved). Probes apply live delete layers LOGICALLY: the
+    sets-side anti-join guarantees a deleted id never VERIFIES as a
+    match, and the pre-cap candidate filter (`_incremental_matches`
+    ``deleted_ids``) removes deleted ids from the stored bucket arrays
+    BEFORE the per-doc candidate cap, so a deleted id cannot displace a
+    genuine near-duplicate out of the capped prefix. Past
+    `_DELETE_CANDIDATE_FILTER_MAX` pending ids the second layer falls
+    back to slot-loss-until-compaction (verification correctness is
+    never affected — run the compaction). The next compaction applies
+    deletions PHYSICALLY — sets rows dropped, bucket member arrays
+    filtered — retires the layers, and records the key in the pointer's
+    ``del_folded`` manifest so a replayed delete is a no-op. Deleting an
+    id that was never in the store is a harmless no-op row. Cost:
+    O(delete batch) now, O(store) at the next compaction."""
+    with snapshot.write_lock(store_dir):
+        SIG_STORE.reconcile(store_dir)
+        if delete_key in SIG_STORE.manifest(
+            SIG_STORE.pointer(store_dir), "deletes"
+        ):
             return  # already physically applied by a compaction
-        layer = os.path.join(store_dir, "deletes", delete_key)
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        (
-            doc_ids.select(F.col(id_col).cast("long").alias("id"))
+        SIG_STORE.write_layer(
+            store_dir, "deletes", delete_key,
+            lambda fresh: doc_ids.select(F.col(id_col).cast("long").alias("id"))
             .distinct()
             .write.mode("overwrite")
-            .parquet(os.path.join(fresh, "ids"))
+            .parquet(os.path.join(fresh, "ids")),
         )
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"), {"ts": time.time()}
-            )
-        os.rename(fresh, layer)
 
 
 def _store_manifest_ordered(store_dir: str) -> list[str]:
-    """Ingest keys already folded into the base layer, in FOLD ORDER
-    (oldest first) — the order the compactor wrote them, which is layer
+    """Ingest keys already folded into the base, in FOLD ORDER (oldest
+    first) — the order the compactor wrote them, which is layer
     append-time order, NOT lexicographic key order. Recency decisions
-    (``minhash_store_manifest_gc``) must use this order: arbitrary ingest
-    keys don't sort chronologically ('day10' < 'day2' lexicographically),
-    and GC'ing the wrong end shrinks the replay-idempotency window
-    (ADVICE r11). Since r16 the manifest travels INSIDE the snapshot
-    pointer (one atomic document with the base version — see
-    `_commit_pointer`); ``folded_keys.json`` is read only for legacy
-    stores the next write path hasn't migrated yet."""
-    import json as _json
-
-    ptr = _load_pointer(store_dir)
-    if ptr is not None:
-        return list(ptr.get("folded", ()))
-    path = os.path.join(store_dir, "folded_keys.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return list(_json.load(f))
-    return []
-
-
-def _store_manifest(store_dir: str) -> set[str]:
-    """Ingest keys already folded into the base layer by compaction."""
-    return set(_store_manifest_ordered(store_dir))
+    (``minhash_store_manifest_gc``) must use this order: arbitrary
+    ingest keys don't sort chronologically ('day10' < 'day2'), and
+    GC'ing the wrong end shrinks the replay-idempotency window."""
+    return SIG_STORE.manifest(SIG_STORE.pointer(store_dir), "append")
 
 
 def minhash_signature_store_append(
@@ -1034,40 +954,18 @@ def minhash_signature_store_append(
     as a new LAYER ``append/<ingest_key>/{sets,bands}`` — the write half
     of the daily loop: probe the slice, keep the survivors, append them
     so TOMORROW's slice dedups against today's. Idempotent per
-    ``ingest_key``: the layer dir is overwritten on re-delivery, and a
-    key the compactor has already folded into the base (the manifest,
-    ``folded_keys.json``) is skipped entirely — replaying a processed
-    day is a no-op, the same batch-id discipline as the streaming upsert
-    sink (streaming/runner.py). Layers hold RAW band rows (the LSM log);
-    ``minhash_signature_store_compact`` folds them into the
+    ``ingest_key``: a redelivered key replaces its layer write-aside (the
+    old files are never overwritten in place, a stale reader keeps
+    them), and a key the compactor has already folded (the pointer's
+    ``folded`` manifest) is skipped entirely — the same batch-id
+    discipline as the streaming upsert sink (streaming/runner.py).
+    ``minhash_signature_store_compact`` folds layers into the
     bucket-aggregated base."""
-    import shutil
 
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        if ingest_key in _store_manifest(store_dir):
-            return
-        layer = os.path.join(store_dir, "append", ingest_key)
-        # Write-ASIDE, never in place (ADVICE r15): a redelivered key may
-        # land on an existing layer dir — live (unfolded redelivery) or
-        # tombstoned-in-grace (folded, manifest-GC-trimmed, redelivered) —
-        # and mode("overwrite") would delete part files a stale lockless
-        # reader already resolved: the exact crash class the two-phase GC
-        # exists to prevent. The fresh content goes to ``<key>.next``; the
-        # swap renames the old dir away (tombstoned for grace collection,
-        # every resolved path still valid) and the new one into place — a
-        # fresh dir carries no tombstone, so this also resurrects a
-        # trimmed-and-redelivered key without touching the old files.
-        # Crash anywhere mid-swap is healed by ``_recover_store_swap``'s
-        # layer pass (roll a complete orphaned .next forward, tombstone an
-        # untombstoned .old, delete an incomplete .next).
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        a_sets = _shingle_sets(
+    def write(fresh):
+        _shingle_sets(
             accepted_docs, text_col, id_col, shingle_n, repartition=False
-        )
-        a_sets.write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
+        ).write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
         (
             _band_rows(
                 spark.read.parquet(os.path.join(fresh, "sets")), num_hashes, seed
@@ -1075,125 +973,12 @@ def minhash_signature_store_append(
             .write.mode("overwrite")
             .parquet(os.path.join(fresh, "bands"))
         )
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"), {"ts": time.time()}
-            )
-        os.rename(fresh, layer)
 
-
-def _store_layer_dirs(store_dir: str) -> list[str]:
-    """Live append layers: complete (``bands/_SUCCESS``) and not
-    tombstoned. The tombstone check is load-bearing independently of the
-    folded-keys manifest: a folded layer awaits grace-period deletion on
-    disk (two-phase GC, r15) and its key can be TRIMMED from the manifest
-    by ``minhash_store_manifest_gc`` before the dir is collected — without
-    this check the trimmed-but-undeleted layer would re-enter probes and
-    compactions as a live layer and double-count its rows."""
-    append_dir = os.path.join(store_dir, "append")
-    if not os.path.isdir(append_dir):
-        return []
-    return sorted(
-        os.path.join(append_dir, k)
-        for k in os.listdir(append_dir)
-        # ``<key>.next`` (in-progress write-aside) and ``<key>.old-<ts>``
-        # (swapped-out content awaiting grace collection) are swap
-        # scaffolding, never live layers, even when a crash left them
-        # complete-looking (ADVICE r15 redelivery write-aside).
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(append_dir, k, "bands", "_SUCCESS"))
-        and not os.path.exists(
-            os.path.join(append_dir, k, "superseded.json")
-        )
-    )
-
-
-def _tombstone_folded_layers(
-    store_dir: str, keys: set[str] | None = None
-) -> None:
-    """Phase 1 of the store's two-phase layer GC (r15 — ports the
-    bucketed layout's reader-grace pattern, advanced.py
-    `_gc_superseded_layouts`, after a live cross-process crash: a
-    lockless reader that resolved its view pre-compaction took
-    PATH_NOT_FOUND mid-scan when the old compaction ``rmtree``'d the
-    append layers it was still reading). Folded layers are tombstoned IN
-    PLACE (``superseded.json`` with a timestamp) so every file path a
-    stale reader already resolved stays valid; enumeration
-    (`_store_layer_dirs`) hides tombstoned layers from new readers and
-    compactions. ``keys`` limits the sweep to the named ingest keys —
-    REQUIRED when called from recovery (r16): recovery replays the last
-    commit's phase 1 from the pointer's folded list, and an unrestricted
-    sweep there would tombstone live layers appended after that commit.
-    Caller holds the store write lock."""
-    append_dir = os.path.join(store_dir, "append")
-    if not os.path.isdir(append_dir):
-        return
-    now = time.time()
-    for k in os.listdir(append_dir):
-        if keys is not None and k not in keys:
-            continue
-        layer = os.path.join(append_dir, k)
-        tomb = os.path.join(layer, "superseded.json")
-        if os.path.isdir(layer) and not os.path.exists(tomb):
-            _write_json_atomic(tomb, {"ts": now})
-
-
-def _store_gc_superseded(store_dir: str) -> None:
-    """Phase 2: delete tombstoned layers AND superseded base versions
-    older than ``$PYCAIM_STORE_GC_GRACE`` seconds (default 900 — same
-    default as the layout's ``$PYCAIM_LAYOUT_GC_GRACE``; any reader that
-    resolved its view more than a grace period ago has finished or was
-    abandoned). Runs from every write path under the store write lock;
-    an unreadable tombstone is left for a later pass rather than guessed
-    at. Old base versions carry their tombstone INSIDE the parquet dir
-    as ``_superseded.json`` — the underscore prefix keeps it invisible
-    to a stale reader's parquet scan of that very dir."""
-    import json as _json
-    import shutil
-
-    grace = float(os.environ.get("PYCAIM_STORE_GC_GRACE", "900"))
-    now = time.time()
-
-    def _aged(tomb):
-        try:
-            with open(tomb) as f:
-                return now - float(_json.load(f).get("ts", now)) > grace
-        except (OSError, ValueError, TypeError):
-            return False
-
-    for _kind, _n, path in _version_dirs(store_dir):
-        tomb = os.path.join(path, "_superseded.json")
-        if os.path.exists(tomb) and _aged(tomb):
-            shutil.rmtree(path, ignore_errors=True)
-    # Tombstoned LEGACY dirs (r18: the migration link-assembles v0 and
-    # tombstones the unversioned base instead of renaming it) collect
-    # on the same grace as any displaced version.
-    for d in ("sets", "buckets"):
-        base = os.path.join(store_dir, d)
-        for legacy in (base, base + "_next", base + "_old"):
-            tomb = os.path.join(legacy, "_superseded.json")
-            if os.path.exists(tomb) and _aged(tomb):
-                shutil.rmtree(legacy, ignore_errors=True)
-    for root in ("append", "deletes"):
-        layer_root = os.path.join(store_dir, root)
-        if not os.path.isdir(layer_root):
-            continue
-        for k in os.listdir(layer_root):
-            tomb = os.path.join(layer_root, k, "superseded.json")
-            if os.path.exists(tomb) and _aged(tomb):
-                shutil.rmtree(
-                    os.path.join(layer_root, k), ignore_errors=True
-                )
-        # Drop the parent once everything under it is collected, so "no
-        # layer dir at all" stays the fully-quiesced steady state.
-        try:
-            if not os.listdir(layer_root):
-                os.rmdir(layer_root)
-        except OSError:
-            pass
+    with snapshot.write_lock(store_dir):
+        SIG_STORE.reconcile(store_dir)
+        if ingest_key in _store_manifest_ordered(store_dir):
+            return
+        SIG_STORE.write_layer(store_dir, "append", ingest_key, write)
 
 
 def _merge_bucket_layers(
@@ -1237,458 +1022,47 @@ def _merge_bucket_layers(
     )
 
 
-class _store_write_lock:
-    """Exclusive advisory lock on a signature store, held for the whole
-    body of every WRITE path (build/append/compact, each of which starts
-    with crash recovery). Serializes two concurrent compactions — the
-    second blocks, then finds nothing to fold and no-ops — and keeps a
-    concurrent append from racing the swap renames. Read paths (the
-    probes) take no lock: they never mutate the store (recovery runs
-    only under this lock) and resolve a consistent snapshot via
-    ``_store_read_view`` — since r16 the pointer commit plus grace-period
-    tombstoning of old versions means a commit landing between a probe's
-    resolution and its lazy materialization leaves every resolved path
-    on disk for $PYCAIM_STORE_GC_GRACE seconds. flock is
-    per-open-file, so this also
-    serializes threads inside one driver process. Cross-HOST writers are
-    NOT serialized (flock is host-local) — on an object store the swap
-    below is a table-format commit and the catalog provides the lock."""
-
-    def __init__(self, store_dir: str):
-        os.makedirs(store_dir, exist_ok=True)
-        self._path = os.path.join(store_dir, "store.lock")
-
-    def __enter__(self):
-        import fcntl
-
-        self._f = open(self._path, "w")
-        fcntl.flock(self._f, fcntl.LOCK_EX)
-        return self
-
-    def __exit__(self, *exc):
-        import fcntl
-
-        fcntl.flock(self._f, fcntl.LOCK_UN)
-        self._f.close()
-        return False
-
-
-def _write_json_atomic(path: str, obj) -> None:
-    """Write JSON durably: temp file, fsync, rename into place, fsync the
-    directory entry — a reader (or crash recovery) sees the old content,
-    the new content, or nothing, never a truncated file (ADVICE r10)."""
-    import json as _json
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
-    dfd = os.open(os.path.dirname(path), os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
-
-
-def _load_pointer(store_dir: str) -> dict | None:
-    """Parse the store's snapshot pointer ``current.json`` —
-    ``{"version": N, "folded": [...]}`` — the single atomic commit point
-    of the versioned base (r16, VERDICT r15 #3). Written only via
-    ``_write_json_atomic``, so a reader sees the old snapshot, the new
-    snapshot, or (pre-first-build / legacy store) nothing — never a torn
-    state. ``None`` if absent or unparseable (unparseable ⇒ pre-atomic
-    artifact ⇒ treat as legacy/unbuilt, same doctrine as
-    ``_load_journal``)."""
-    import json as _json
-
-    path = os.path.join(store_dir, "current.json")
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            ptr = _json.load(f)
-        return ptr if isinstance(ptr.get("version"), int) else None
-    except (OSError, ValueError, AttributeError):
-        return None
-
-
-def _commit_pointer(
-    store_dir: str, version: int, folded: list[str],
-    del_folded: list[str] | None = None,
-) -> None:
-    """Atomically publish a new base snapshot: one fsynced rename flips
-    every reader from (sets_v{N}, buckets_v{N}, folded_N) to version
-    N+1's triple — base paths and the folded-layer skip set travel in
-    the SAME document, so no interleaving can pair a new base with a
-    stale skip set (the double-count mode the old journal stability loop
-    defended against). ``del_folded`` (r18) is the applied-deletion
-    manifest — delete keys a compaction has folded physically, the
-    replay-idempotency guard for `minhash_signature_store_delete` —
-    carried in the same atomic document; omitted while empty so
-    pre-r18 pointer shapes stay bit-stable."""
-    doc = {"version": version, "folded": list(folded)}
-    if del_folded:
-        doc["del_folded"] = list(del_folded)
-    _write_json_atomic(os.path.join(store_dir, "current.json"), doc)
-
-
-def _versioned(store_dir: str, name: str, version: int) -> str:
-    return os.path.join(store_dir, f"{name}_v{version}")
-
-
-def _version_dirs(store_dir: str) -> list[tuple[str, int, str]]:
-    """All on-disk versioned base dirs as (kind, version, path)."""
-    out = []
-    if not os.path.isdir(store_dir):
-        return out
-    for d in os.listdir(store_dir):
-        for kind in ("sets", "buckets"):
-            prefix = f"{kind}_v"
-            if d.startswith(prefix):
-                try:
-                    out.append(
-                        (kind, int(d[len(prefix):]),
-                         os.path.join(store_dir, d))
-                    )
-                except ValueError:
-                    pass
-    return out
-
-
-def _load_journal(store_dir: str) -> list[str] | None:
-    """Parse the compaction commit journal; ``None`` if absent OR
-    unparseable. The journal is written atomically (temp + rename), so a
-    truncated file can only be a pre-atomic-write artifact or torn
-    storage — and treating it as absent is SAFE: the swap renames only
-    start after the journal is durably in place, so no journal ⇒ the old
-    base and every append layer are intact ⇒ roll back (ADVICE r10: a
-    truncated journal must not strand the store)."""
-    import json as _json
-
-    journal = os.path.join(store_dir, "compact_journal.json")
-    if not os.path.exists(journal):
-        return None
-    try:
-        with open(journal) as f:
-            return _json.load(f)
-    except ValueError:
-        return None
-
-
-def _recover_layer_swaps(store_dir: str) -> None:
-    """Heal a crashed per-layer write-aside swap (the redelivery path of
-    ``minhash_signature_store_append``, ADVICE r15). Deterministic from
-    the on-disk shapes alone: a COMPLETE orphaned ``<key>.next``
-    (``bands/_SUCCESS`` present, no live ``<key>`` sibling) is the
-    committed content of a crash between the two swap renames — roll it
-    forward; an incomplete or non-orphaned ``.next`` is an uncommitted
-    write — delete it (the old layer, live or already renamed aside, is
-    intact); an ``<key>.old-<ts>`` that missed its tombstone gets one so
-    grace GC collects it. Caller holds the store write lock."""
-    import shutil
-
-    for root, marker in (("append", "bands"), ("deletes", "ids")):
-        layer_root = os.path.join(store_dir, root)
-        if not os.path.isdir(layer_root):
-            continue
-        for k in os.listdir(layer_root):
-            d = os.path.join(layer_root, k)
-            if k.endswith(".next"):
-                layer = d[: -len(".next")]
-                if not os.path.exists(layer) and os.path.exists(
-                    os.path.join(d, marker, "_SUCCESS")
-                ):
-                    os.rename(d, layer)
-                else:
-                    shutil.rmtree(d, ignore_errors=True)
-            elif ".old-" in k and not os.path.exists(
-                os.path.join(d, "superseded.json")
-            ):
-                _write_json_atomic(
-                    os.path.join(d, "superseded.json"),
-                    {"ts": time.time()},
-                )
-
-
-def _recover_store_swap(store_dir: str) -> None:
-    """Reconcile a store's on-disk state after any crash (runs at the
-    top of every WRITE path, under ``_store_write_lock`` — probes stay
-    read-only, ADVICE r10).
-
-    Since r16 the base is VERSIONED (``sets_v{N}``/``buckets_v{N}``)
-    behind the atomic ``current.json`` snapshot pointer, so recovery is
-    a pure reconciliation with no roll-forward/roll-back decision tree:
-
-    - version dirs NEWER than the pointer are uncommitted compactor
-      output (the pointer flip is the commit) — delete them; the
-      compaction re-derives them bit-identically;
-    - version dirs OLDER than the pointer that missed their tombstone
-      (crash between pointer commit and phase-1 GC) get one, so grace
-      collection proceeds;
-    - append layers named in the pointer's ``folded`` list that missed
-      their tombstone get one (same crash window).
-
-    LEGACY stores (pre-r16: unversioned ``sets``/``buckets`` plus the
-    journal/next/old swap machinery) are first healed by the old
-    protocol — journal present → the ``*_next`` base is authoritative,
-    finish the renames; absent → delete strays — and then MIGRATED in
-    place: base dirs renamed to ``*_v0``, the folded manifest folded
-    into a version-0 pointer, ``folded_keys.json`` retired."""
-    import shutil
-
-    _recover_layer_swaps(store_dir)
-    ptr = _load_pointer(store_dir)
-    if ptr is None:
-        journal = os.path.join(store_dir, "compact_journal.json")
-        folded = _load_journal(store_dir)
-        dirs = [os.path.join(store_dir, d) for d in ("sets", "buckets")]
-        if folded is None:
-            # No (or torn) journal: ADVICE r10 doctrine — renames only
-            # started after an atomic journal write, so the unversioned
-            # base + layers are intact and *_next/*_old are debris.
-            if os.path.exists(journal):
-                os.remove(journal)
-            for cur in dirs:
-                for stray in (cur + "_next", cur + "_old"):
-                    if os.path.exists(stray):
-                        shutil.rmtree(stray)
-        else:
-            # Valid journal: the folded base is authoritative, but the
-            # legacy binary may have crashed at ANY point of its rename
-            # sequence, so per dir the folded content is in *_next
-            # (rename not yet executed) or already in the unversioned
-            # dir (rename consumed the next). The per-dir source rule
-            # below handles every mix — including one-renamed-one-not,
-            # where choosing next-if-complete-else-cur yields the
-            # consistent POST-fold pair. An incomplete *_next (no
-            # _SUCCESS — impossible under the legacy protocol's
-            # write-journal-after-next-completes invariant, so only a
-            # corrupted store) is treated as absent: the unversioned
-            # dir serves, strictly safer than the legacy heal's rename
-            # of the torn dir over it. The journal itself is consumed
-            # only after the migration commits (below), preserving the
-            # folded-keys manifest the r17 heal wrote to
-            # folded_keys.json — dropping it would leave the
-            # physically-folded layers live with an empty skip set and
-            # double-count their rows through the layered probe.
-            for cur in dirs:
-                nxt = cur + "_next"
-                if os.path.exists(nxt) and not os.path.exists(
-                    os.path.join(nxt, "_SUCCESS")
-                ):
-                    shutil.rmtree(nxt)
-        # Migrate a healed legacy base to the versioned layout, written
-        # as a crash-idempotent FORWARD COMPLETION (a crash anywhere
-        # must not strand or delete data). r18 (VERDICT r17 #6): v0 is
-        # LINK-ASSEMBLED from the live legacy dir — with a journal,
-        # from its *_next twin, which the legacy commit point made
-        # authoritative — never renamed (layout.py's pattern), so a
-        # lockless reader mid-materialization on a legacy store keeps
-        # scanning intact files; the legacy dirs are TOMBSTONED after
-        # the pointer commits and grace-collected. The assembly is
-        # complete-or-absent (temp dir + atomic rename), so a
-        # pointer-less COMPLETE v0 pair is a crashed migration →
-        # commit it; an incomplete pair can only be a direct v0 build
-        # that crashed before its pointer → delete the strays, the
-        # next build re-derives. Legacy READERS resolve through
-        # `_store_read_view`'s fallback + stability loop and settle on
-        # the pointer once it lands; their resolved legacy paths stay
-        # on disk for the grace period. The pre-r18 honesty note (the
-        # one-time migration rename window) is gone — there is no
-        # rename of live files anywhere in this store family.
-        v0 = [d + "_v0" for d in dirs]
-        for cur, nxt in zip(dirs, v0):
-            stray = nxt + ".assembling"
-            shutil.rmtree(stray, ignore_errors=True)
-            src = (
-                cur + "_next"
-                if folded is not None
-                and os.path.exists(os.path.join(cur + "_next", "_SUCCESS"))
-                else cur
-            )
-            if os.path.exists(src) and not os.path.exists(nxt):
-                os.makedirs(stray)
-                for fn in os.listdir(src):
-                    full = os.path.join(src, fn)
-                    if not os.path.isfile(full):
-                        continue
-                    try:
-                        os.link(full, os.path.join(stray, fn))
-                    except OSError:
-                        shutil.copy2(full, os.path.join(stray, fn))
-                os.rename(stray, nxt)
-        manifest = os.path.join(store_dir, "folded_keys.json")
-        if all(
-            os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0
-        ):
-            legacy_folded = list(folded) if folded is not None else []
-            if folded is None and os.path.exists(manifest):
-                import json as _json
-
-                with open(manifest) as f:
-                    legacy_folded = list(_json.load(f))
-            _commit_pointer(store_dir, 0, legacy_folded)
-            if os.path.exists(manifest):
-                os.remove(manifest)
-            if folded is not None:
-                _tombstone_folded_layers(store_dir, keys=set(folded))
-                if os.path.exists(journal):
-                    os.remove(journal)
-            # Phase-1 GC of the superseded legacy dirs (underscore
-            # marker: invisible to a stale reader's parquet scan of
-            # that very dir); `_store_gc_superseded` collects them
-            # after grace, like any displaced version.
-            for cur in dirs:
-                for d in (cur, cur + "_next", cur + "_old"):
-                    if os.path.isdir(d):
-                        _write_json_atomic(
-                            os.path.join(d, "_superseded.json"),
-                            {"ts": time.time()},
-                        )
-        else:
-            for d in v0:
-                if os.path.exists(d):
-                    shutil.rmtree(d)
-        return
-    v = ptr["version"]
-    for _kind, n, path in _version_dirs(store_dir):
-        if n > v:
-            shutil.rmtree(path, ignore_errors=True)
-        elif n < v and not os.path.exists(
-            os.path.join(path, "_superseded.json")
-        ):
-            _write_json_atomic(
-                os.path.join(path, "_superseded.json"),
-                {"ts": time.time()},
-            )
-    # Delete layers the pointer has folded (``del_folded``) whose
-    # tombstone write was lost to a crash: re-lay it so grace
-    # collection proceeds — probes stay correct meanwhile (re-filtering
-    # already-removed ids is a no-op).
-    for dl in _store_delete_dirs(store_dir):
-        if os.path.basename(dl) in set(ptr.get("del_folded", ())):
-            _write_json_atomic(
-                os.path.join(dl, "superseded.json"),
-                {"ts": time.time()},
-            )
-    # Legacy scaffolding outliving a crash between the migration's
-    # pointer commit and its phase-1 tombstoning (r18): the pointer
-    # supersedes the unversioned dirs by definition — re-lay their
-    # tombstones idempotently; `.assembling` strays are unpublished.
-    for d in ("sets", "buckets"):
-        base = os.path.join(store_dir, d)
-        shutil.rmtree(base + "_v0.assembling", ignore_errors=True)
-        for legacy in (base, base + "_next", base + "_old"):
-            tomb = os.path.join(legacy, "_superseded.json")
-            if os.path.isdir(legacy) and not os.path.exists(tomb):
-                _write_json_atomic(tomb, {"ts": time.time()})
-    _tombstone_folded_layers(store_dir, keys=set(ptr.get("folded", ())))
-
-
 def _store_read_view(store_dir: str) -> tuple[str, str, set[str]]:
-    """Resolve a CONSISTENT read-only view of the store: returns
-    (sets_path, buckets_path, folded_keys_to_skip).
-
-    Since r16 (VERDICT r15 #3) this is a SNAPSHOT-POINTER read: one
-    atomic parse of ``current.json`` yields the base version AND the
-    folded-layer skip set together, and the resolved ``sets_v{N}``/
-    ``buckets_v{N}`` dirs are IMMUTABLE once published — a compaction
-    that commits version N+1 while this reader is still materializing
-    only flips the pointer and tombstones version N, whose files stay on
-    disk for ``$PYCAIM_STORE_GC_GRACE`` seconds (the version tombstone
-    lives INSIDE the dir as underscore-prefixed ``_superseded.json``,
-    invisible to the parquet scan). That closes the last lockless-reader
-    window this store family had: pre-r16 the base swap renamed the
-    CURRENT dirs, so a reader that resolved before a commit could take
-    FileNotFoundException mid-scan and needed a documented re-plan
-    remedy; now every resolved path outlives the reader by a grace
-    period, the same contract the append layers have had since r15 —
-    the exact lifetime semantics a table-format snapshot commit provides
-    in deployment. A reader stale by MORE than the grace period (scan
-    paused ~15 min across a commit) is the residual, governed by the
-    grace knob like every two-phase GC in this repo.
-
-    Legacy stores (no pointer yet — migrated lazily by the next write
-    path's `_recover_store_swap`) fall back to the pre-r16 resolution:
-    journal present → the ``*_next`` base is authoritative and its
-    folded layers are skipped; absent → the unversioned dirs, with a
-    stability loop re-resolving until the journal state and dir
-    existence agree (a mid-migration reader re-enters here and settles
-    on the post-migration pointer). Since r18 (VERDICT r17 #6) the
-    one-time legacy→versioned migration LINK-ASSEMBLES ``*_v0`` from
-    the live unversioned dirs and tombstones them after the pointer
-    commits — the pre-r18 rename of live files (and its documented
-    FileNotFoundException window for a mid-materialization legacy
-    reader) is gone: a legacy reader's resolved paths now outlive the
-    migration by the grace period, so the "no reader-visible rename
-    anywhere" claim holds for EVERY store, born versioned or legacy."""
-    for attempt in range(20):
-        ptr = _load_pointer(store_dir)
-        if ptr is not None:
-            v = ptr["version"]
-            return (
-                _versioned(store_dir, "sets", v),
-                _versioned(store_dir, "buckets", v),
-                set(ptr.get("folded", ())),
-            )
-        folded = _load_journal(store_dir)
-        paths = []
-        for d in ("sets", "buckets"):
-            cur = os.path.join(store_dir, d)
-            nxt = cur + "_next"
-            paths.append(
-                nxt if folded is not None and os.path.exists(nxt) else cur
-            )
-        # Stability check: a swap that landed mid-resolution could pair
-        # one pre-swap path with one post-swap path (old sets + new
-        # buckets double-counts folded layers through skip_keys=∅).
-        # Accept only a resolution whose journal state is unchanged and
-        # whose dirs all exist after resolving.
-        if all(os.path.exists(p) for p in paths) and \
-                _load_journal(store_dir) == folded:
-            break
-        time.sleep(0.05)
-    return paths[0], paths[1], set(folded or ())
+    """The committed snapshot as (sets_path, buckets_path, folded append
+    keys) — one atomic pointer parse, so the base and its skip set always
+    match. Version dirs are immutable: a compaction that commits while
+    this reader materializes only flips the pointer and tombstones the
+    old version, whose files stay on disk for ``$PYCAIM_STORE_GC_GRACE``
+    seconds (a reader stale by more than that is the residual)."""
+    ptr = SIG_STORE.pointer(store_dir)
+    if ptr is None:
+        raise FileNotFoundError(
+            f"signature store at {store_dir} has no committed snapshot "
+            "(current.json) — build it with minhash_signature_store_build"
+        )
+    return (
+        SIG_STORE.version_dir(store_dir, "sets", ptr["version"]),
+        SIG_STORE.version_dir(store_dir, "buckets", ptr["version"]),
+        set(SIG_STORE.manifest(ptr, "append")),
+    )
 
 
 def minhash_signature_store_compact(spark, store_dir: str) -> None:
-    """Fold every live append layer into a NEW base version and commit
-    it with one atomic pointer flip — the LSM compaction, re-based on
-    the r16 snapshot-pointer layout (VERDICT r15 #3). The merged base is
-    written to ``sets_v{N+1}``/``buckets_v{N+1}`` beside the live
-    version; ``current.json`` is then rewritten atomically with the new
-    version AND the updated folded-keys manifest in one document (so no
-    reader can pair the new base with a stale skip set); finally the
-    folded layers and the old version dirs are TOMBSTONED in place and
-    collected by `_store_gc_superseded` after ``$PYCAIM_STORE_GC_GRACE``
-    seconds — a lockless reader that resolved version N keeps every one
-    of its files for the whole grace period (r15 reproduced the crash
-    this prevents for layers; r16 extends the same lifetime to the base,
-    deleting the FileNotFoundException window the journal-era swap had).
-    A process crash anywhere is reconciled by `_recover_store_swap`: the
-    pointer flip IS the commit, so pre-flip crashes leave uncommitted
-    ``*_v{N+1}`` strays (deleted, re-derived next time) and post-flip
-    crashes leave missing tombstones (re-laid idempotently). Scope
-    (ADVICE r10): the pointer is fsynced, the parquet part files are the
-    filesystem's durability contract, not this function's. Concurrency:
-    runs under the store's exclusive write lock, so a second concurrent
-    compaction blocks and then no-ops (no layers left to fold)."""
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        layers = _store_layer_dirs(store_dir)
-        del_layers = _store_delete_dirs(store_dir)
+    """Fold every live append and delete layer into a NEW base version
+    and commit it with one atomic pointer flip — the LSM compaction. The
+    merged base is written to ``sets_v{N+1}``/``buckets_v{N+1}`` beside
+    the live version; the pointer then names the new version AND both
+    updated manifests in one document; the folded layers and the old
+    version are tombstoned and collected after ``$PYCAIM_STORE_GC_GRACE``
+    seconds (`SIG_STORE.fold`). A crash before the flip leaves an
+    uncommitted version the next write path deletes; after it, missing
+    tombstones the next write path re-lays. The parquet part files are
+    the filesystem's durability contract; the pointer is fsynced. Runs
+    under the store's write lock, so a second concurrent compaction
+    blocks and then no-ops (no layers left to fold)."""
+    with snapshot.write_lock(store_dir):
+        SIG_STORE.reconcile(store_dir)
+        layers = SIG_STORE.live_layers(store_dir, "append")
+        del_layers = SIG_STORE.live_layers(store_dir, "deletes")
         if not layers and not del_layers:
             return
-        ptr = _load_pointer(store_dir)
+        ptr = SIG_STORE.pointer(store_dir)
         if ptr is None:
-            # Live append layers but no committed base snapshot (a base
-            # build that never completed, or a legacy migration that
-            # removed incomplete v0 dirs): there is nothing to fold
-            # INTO. Fail with the actual condition instead of the
-            # opaque 'NoneType not subscriptable' (ADVICE r16).
             raise RuntimeError(
                 f"signature store at {store_dir} has append layers but "
                 "no committed base snapshot (current.json missing) — "
@@ -1696,9 +1070,10 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
                 "compacting"
             )
         v = ptr["version"]
-        sets_dir = _versioned(store_dir, "sets", v)
-        buckets_dir = _versioned(store_dir, "buckets", v)
-        merged_sets = spark.read.parquet(sets_dir)
+        merged_sets = spark.read.parquet(SIG_STORE.version_dir(store_dir, "sets", v))
+        merged_buckets = spark.read.parquet(
+            SIG_STORE.version_dir(store_dir, "buckets", v)
+        )
         pending = None
         for l in layers:
             merged_sets = merged_sets.unionByName(
@@ -1706,15 +1081,13 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
             )
             bands = spark.read.parquet(os.path.join(l, "bands"))
             pending = bands if pending is None else pending.unionByName(bands)
-        merged_buckets = (
-            _merge_bucket_layers(spark.read.parquet(buckets_dir), pending)
-            if pending is not None
-            else spark.read.parquet(buckets_dir)
-        )
-        if del_layers:
-            # PHYSICAL deletion fold (r18): drop deleted docs from the
-            # sets side and filter them out of every bucket's member
-            # array (explode → anti-mark → re-aggregate under the same
+        if pending is not None:
+            merged_buckets = _merge_bucket_layers(merged_buckets, pending)
+        dels = SIG_STORE.deleted_ids(spark, store_dir, "deletes")
+        if dels is not None:
+            # PHYSICAL deletion fold: drop deleted docs from the sets
+            # side and filter them out of every bucket's member array
+            # (explode → anti-mark → re-aggregate under the same
             # merge-stable min-id-prefix cap; width decremented by the
             # members actually removed — beyond-cap width remains the
             # conservative collision count it always was). A bucket
@@ -1723,11 +1096,6 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
             # deleted docs, except where a deleted id had evicted
             # another past BUCKET_STORE_CAP (cap 1024 — a documented,
             # fixture-unreachable approximation).
-            dels = None
-            for dl in del_layers:
-                ids = spark.read.parquet(os.path.join(dl, "ids"))
-                dels = ids if dels is None else dels.unionByName(ids)
-            dels = dels.distinct()
             merged_sets = merged_sets.join(
                 F.broadcast(dels), "id", "left_anti"
             )
@@ -1762,56 +1130,16 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
                 .filter(F.size("ids") > 0)
             )
         merged_sets.write.mode("overwrite").parquet(
-            _versioned(store_dir, "sets", v + 1)
+            SIG_STORE.version_dir(store_dir, "sets", v + 1)
         )
         merged_buckets.write.mode("overwrite").parquet(
-            _versioned(store_dir, "buckets", v + 1)
+            SIG_STORE.version_dir(store_dir, "buckets", v + 1)
         )
-        # The manifest is kept in FOLD order (oldest first): prior order,
-        # then this compaction's layers ordered by append time (layer dir
-        # mtime, name tiebreak). GC recency must not depend on key
-        # spelling — 'day10' sorts before 'day2' lexicographically
-        # (ADVICE r11).
-        new_keys = [
-            os.path.basename(l)
-            for l in sorted(layers, key=lambda p: (os.path.getmtime(p), p))
-        ]
-        prior = _store_manifest_ordered(store_dir)
-        folded = prior + [k for k in new_keys if k not in prior]
-        new_del_keys = [
-            os.path.basename(l)
-            for l in sorted(
-                del_layers, key=lambda p: (os.path.getmtime(p), p)
-            )
-        ]
-        prior_del = _store_del_manifest(store_dir)
-        del_folded = prior_del + [
-            k for k in new_del_keys if k not in prior_del
-        ]
-        # THE commit: new base + both manifests become visible together.
-        _commit_pointer(store_dir, v + 1, folded, del_folded=del_folded)
-        # Two-phase GC (r15): the old immediate `rmtree(append)` here
-        # crashed a concurrent lockless reader mid-scan (reproduced:
-        # pytest's dedup_stream_ingest PATH_NOT_FOUND while verify_sweep
-        # compacted the shared store). Tombstone in place — folded layers
-        # AND the superseded base version; collect past grace on later
-        # write passes.
-        _tombstone_folded_layers(store_dir, keys=set(new_keys))
-        now = time.time()
-        # Applied delete layers retire on the same two-phase contract.
-        for dl in del_layers:
-            _write_json_atomic(
-                os.path.join(dl, "superseded.json"), {"ts": now}
-            )
-        for old in (sets_dir, buckets_dir):
-            _write_json_atomic(
-                os.path.join(old, "_superseded.json"), {"ts": now}
-            )
-        _store_gc_superseded(store_dir)
-        # Housekeeping on the compaction cadence (VERDICT r11 #5): trim
-        # the manifest to the newest $PYCAIM_STORE_GC_KEEP folded keys
-        # (default 128 — generous vs. any sane upstream redelivery
-        # horizon; 0 disables). Still under this compaction's write lock.
+        SIG_STORE.fold(store_dir, ptr, {"append": layers, "deletes": del_layers})
+        # Housekeeping on the compaction cadence: trim the manifest to
+        # the newest $PYCAIM_STORE_GC_KEEP folded keys (default 128 —
+        # generous vs. any sane upstream redelivery horizon; 0
+        # disables). Still under this compaction's write lock.
         keep = int(os.environ.get("PYCAIM_STORE_GC_KEEP", "128"))
         if keep > 0:
             _manifest_gc_locked(store_dir, keep)
@@ -1820,45 +1148,35 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
 def minhash_store_manifest_gc(store_dir: str, keep_last: int = 32) -> int:
     """Trim the folded-keys manifest to its ``keep_last`` most recently
     FOLDED ingest keys and return how many were dropped. Recency is fold
-    order (the order the compactor appended them — layer append-time
-    order, ``_store_manifest_ordered``), never lexicographic key order:
-    arbitrary keys don't sort chronologically ('day10' < 'day2'), and
-    dropping the wrong end would shrink the replay-idempotency window
-    for the keys most likely to be redelivered (ADVICE r11).
+    order (``_store_manifest_ordered``), never lexicographic key order.
     The manifest's only job is replay idempotency (a re-delivered,
     already-folded ingest key no-ops in ``minhash_signature_store_append``),
     so GC trades manifest size for replay window: a key older than the
     retained window would re-append on replay and re-introduce its rows
     as duplicates — run GC with ``keep_last`` ≥ the upstream redelivery
-    horizon (e.g. a few times the ingest pipeline's max retry age). At
-    one key per daily ingest the un-GC'd manifest grows ~4 KB/decade, so
-    this is housekeeping, not a scale requirement. Runs automatically at
-    the end of every compaction with ``$PYCAIM_STORE_GC_KEEP`` (default
-    128, generous vs. any sane redelivery horizon); this standalone entry
-    point exists for explicit housekeeping with a tighter window."""
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
+    horizon. At one key per daily ingest the un-GC'd manifest grows
+    ~4 KB/decade, so this is housekeeping, not a scale requirement. Runs
+    automatically at the end of every compaction with
+    ``$PYCAIM_STORE_GC_KEEP``; this entry point exists for explicit
+    housekeeping with a tighter window."""
+    with snapshot.write_lock(store_dir):
+        SIG_STORE.reconcile(store_dir)
         return _manifest_gc_locked(store_dir, keep_last)
 
 
 def _manifest_gc_locked(store_dir: str, keep_last: int) -> int:
     """GC body, caller holds the write lock (compaction tail-calls this
-    inside its own lock — flock on the same fd is not reentrant). On a
-    pointer-committed store the trim rewrites the pointer in place
-    (same base version, shorter folded list — still one atomic doc);
-    the legacy-file branch only runs for unmigrated stores."""
-    keys = _store_manifest_ordered(store_dir)
+    inside its own lock). The trim rewrites the pointer in place: same
+    base version, shorter ``folded`` list, ``del_folded`` kept."""
+    ptr = SIG_STORE.pointer(store_dir)
+    keys = SIG_STORE.manifest(ptr, "append")
     if len(keys) <= keep_last:
         return 0
     kept = keys[-keep_last:] if keep_last > 0 else []
-    ptr = _load_pointer(store_dir)
-    if ptr is not None:
-        _commit_pointer(store_dir, ptr["version"], kept)
-    else:
-        _write_json_atomic(
-            os.path.join(store_dir, "folded_keys.json"), kept
-        )
+    SIG_STORE.write_pointer(
+        store_dir, ptr["version"],
+        {"append": kept, "deletes": SIG_STORE.manifest(ptr, "deletes")},
+    )
     return len(keys) - len(kept)
 
 
@@ -1881,30 +1199,24 @@ def incremental_minhash_dedup_layered(
     buckets — both sides stream through broadcast hash joins against the
     delta and merge per hit (``_incremental_matches`` ``extra_buckets``;
     merge-stable cap), so the base bucket index never shuffles here (the
-    old pre-join ``_merge_bucket_layers`` full-outer reshuffled the
-    whole base index per probe — caught by the r11 per-batch stream plan
-    assert; that merge now runs only inside compaction, where it
-    belongs). Verdicts equal a probe of the compacted store, asserted in
-    tests/test_llm_ops.py. Read-only: a mid-swap store resolves via
-    ``_store_read_view`` — the new base plus only the layers it does NOT
-    already contain — instead of being healed in place (ADVICE r10)."""
+    merge runs only inside compaction). Verdicts equal a probe of the
+    compacted store, asserted in tests/test_llm_ops.py. Read-only: the
+    committed snapshot plus only the layers it does NOT already contain
+    (a folded layer whose tombstone a crash lost stays skipped)."""
     sets_path, buckets_path, skip_keys = _store_read_view(store_dir)
     b_sets = spark.read.parquet(sets_path)
     store_buckets = spark.read.parquet(buckets_path)
     pending = None
-    for l in _store_layer_dirs(store_dir):
-        if os.path.basename(l) in skip_keys:
-            continue
+    for l in SIG_STORE.live_layers(store_dir, "append", skip=skip_keys):
         b_sets = b_sets.unionByName(
             spark.read.parquet(os.path.join(l, "sets"))
         )
         bands = spark.read.parquet(os.path.join(l, "bands"))
         pending = bands if pending is None else pending.unionByName(bands)
-    # Pending deletions (r18): sets-side anti-join + pre-cap candidate
-    # filter — see `incremental_minhash_dedup_stored`. Applies to base
-    # AND layer signatures (a doc appended then deleted must not match
-    # either).
-    dels = _store_deleted_ids(spark, store_dir)
+    # Pending deletions: sets-side anti-join + pre-cap candidate filter —
+    # see `incremental_minhash_dedup_stored`. Applies to base AND layer
+    # signatures (a doc appended then deleted must not match either).
+    dels = SIG_STORE.deleted_ids(spark, store_dir, "deletes")
     if dels is not None:
         b_sets = b_sets.join(F.broadcast(dels), "id", "left_anti")
     return _incremental_probe(

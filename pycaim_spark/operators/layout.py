@@ -33,14 +33,15 @@ window" docstring). This module ports the pattern to the layout:
   replaces the r16 in-place arm's pending-journal + undo-dir rollback
   (strictly less machinery for strictly more safety).
 
-On an object store the pointer write is the table-format snapshot
-commit and hard links become manifest entries; flock + link is the
-single-host stand-in (same caveat as the signature store).
+The lock, the atomic writer and the tombstones are the store kernel's
+(operators/snapshot.py); the version GC below stays here because
+retention pins and slug commits are layout-only. On an object store the
+pointer write is the table-format snapshot commit and hard links become
+manifest entries; flock + link is the single-host stand-in.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
@@ -49,104 +50,10 @@ import time
 
 import cloudpickle as _cloudpickle
 
+from pycaim_spark.operators import snapshot
 from pycaim_spark.operators.merge import mv_with_crc
 
 _VDIR_RE = re.compile(r"^(.+)_v(\d+)$")
-
-
-class slug_write_lock:
-    """Exclusive advisory lock on ONE layout slug (r18, VERDICT r17
-    #3): mutating motions (CDC merge, stream sink, split/coalesce,
-    time-travel heal) serialize per SLUG instead of on the whole
-    layout root, so CDC streams to different tables run concurrently.
-    The lock FILE lives in the PARENT dir (``.lock_{slug}`` next to
-    the slug dir), never inside it: cross-slug GC rmtree's a
-    collected slug while holding this lock, and deleting a held lock
-    file would let a blocked waiter acquire the orphaned inode while
-    a newcomer acquires a fresh one — two concurrent "owners" (the
-    classic flock-file-deletion hazard). Parent-dir lock files are
-    tiny, bounded by live slug count, and never collected.
-
-    ``blocking=False`` (GC's phase-2 sweep) try-acquires:
-    ``acquired`` is False when a live writer holds the slug, and the
-    caller must skip it. Lock ORDER is root → slug (builders hold the
-    root flock for cross-slug GC, then nest the slug lock; motions
-    take only their slug; GC only ever TRY-locks other slugs) — no
-    cycle is possible.
-
-    Acquisition RE-VERIFIES the inode after the flock lands: GC
-    removes a collected slug's lock file (`remove_slug_lock_file`, so
-    orphans don't accrue one per regenerated corpus), and a waiter
-    that was blocked on the unlinked inode would otherwise "own" a
-    lock no newcomer can see — the acquire loop detects the unlink
-    (path missing or pointing at a different inode) and retries on a
-    fresh open, the standard flock-file-deletion remedy."""
-
-    def __init__(self, slug_dir: str, blocking: bool = True):
-        parent = os.path.dirname(os.path.abspath(slug_dir))
-        os.makedirs(parent, exist_ok=True)
-        self._path = os.path.join(
-            parent, f".lock_{os.path.basename(os.path.abspath(slug_dir))}"
-        )
-        self._blocking = blocking
-        self.acquired = False
-
-    def __enter__(self):
-        import fcntl
-
-        while True:
-            self._f = open(self._path, "a")
-            try:
-                fcntl.flock(
-                    self._f,
-                    fcntl.LOCK_EX
-                    | (0 if self._blocking else fcntl.LOCK_NB),
-                )
-            except BlockingIOError:
-                self._f.close()
-                self._f = None
-                return self
-            try:
-                same = os.stat(self._path).st_ino == os.fstat(
-                    self._f.fileno()
-                ).st_ino
-            except FileNotFoundError:
-                same = False
-            if same:
-                self.acquired = True
-                return self
-            # The file was unlinked (slug collected) while we waited:
-            # this inode is invisible to new lockers — retry fresh.
-            fcntl.flock(self._f, fcntl.LOCK_UN)
-            self._f.close()
-            self._f = None
-
-    def __exit__(self, *exc):
-        import fcntl
-
-        if self._f is not None:
-            fcntl.flock(self._f, fcntl.LOCK_UN)
-            self._f.close()
-        self.acquired = False
-        return False
-
-
-def remove_slug_lock_file(slug_dir: str) -> None:
-    """Delete a COLLECTED slug's lock file (caller holds that slug's
-    lock and has already rmtree'd the slug dir): without this, every
-    regenerated corpus leaves one orphan ``.lock_<slug>`` forever. Safe
-    against the flock-file-deletion hazard because `slug_write_lock`'s
-    acquire loop re-verifies the inode — a waiter blocked on this
-    unlinked file retries on the fresh path instead of owning an
-    invisible lock."""
-    parent = os.path.dirname(os.path.abspath(slug_dir))
-    path = os.path.join(
-        parent, f".lock_{os.path.basename(os.path.abspath(slug_dir))}"
-    )
-    try:
-        os.remove(path)
-    except OSError:
-        pass
 
 
 def _pointer_path(slug_dir: str, rel: str) -> str:
@@ -154,18 +61,11 @@ def _pointer_path(slug_dir: str, rel: str) -> str:
 
 
 def load_layout_pointer(slug_dir: str, rel: str) -> dict | None:
-    """Parse ``{rel}_current.json``; None if absent or unparseable
-    (written only via `_write_json_atomic`, so unparseable ⇒ legacy
-    artifact, same doctrine as the store pointer)."""
-    path = _pointer_path(slug_dir, rel)
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            ptr = json.load(f)
-        return ptr if isinstance(ptr.get("version"), int) else None
-    except (OSError, ValueError, AttributeError):
-        return None
+    """Parse ``{rel}_current.json``; None if absent or unparseable."""
+    ptr = snapshot.read_json(_pointer_path(slug_dir, rel))
+    if isinstance(ptr, dict) and isinstance(ptr.get("version"), int):
+        return ptr
+    return None
 
 
 def resolve_layout_rel(slug_dir: str, rel: str) -> tuple[str, dict | None]:
@@ -244,7 +144,7 @@ def publish_layout_version(
 ) -> tuple[str, dict]:
     """Publish the next version of ``rel`` and atomically flip its
     pointer — the caller MUST hold the rel's SLUG write lock
-    (`slug_write_lock`; builders additionally hold the root flock —
+    (`snapshot.write_lock`; builders additionally hold the root flock —
     publishes within a slug are serialized; readers never take any
     lock).
 
@@ -295,7 +195,7 @@ def publish_layout_version(
             full = os.path.join(src_dir, fn)
             if not os.path.isfile(full):
                 continue
-            if fn == "_superseded.json" or fn.endswith(".tmp"):
+            if fn == snapshot.VERSION_TOMBSTONE or fn.endswith(".tmp"):
                 continue
             base = fn[1:-len(".crc")] if (
                 fn.startswith(".") and fn.endswith(".crc")
@@ -305,12 +205,10 @@ def publish_layout_version(
             _link_or_copy(full, os.path.join(vdir, fn))
         for f in staged_files or ():
             mv_with_crc(f, vdir)
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
     ptr = {"version": n, "dir": vname, **(extra or {})}
     ts = time.time()
     ptr["ts"] = ts
-    _write_json_atomic(
+    snapshot.write_json(
         os.path.join(vdir, "_commit.json"),
         {"version": n, "ts": ts, "kind": _commit_kind(extra, prebuilt_dir),
          "key": _commit_key(extra)},
@@ -330,7 +228,7 @@ def publish_layout_version(
             )
         ptr["files"] = files
         ptr["stats_cols"] = list(cols)
-    _write_json_atomic(_pointer_path(slug_dir, rel), ptr)
+    snapshot.write_json(_pointer_path(slug_dir, rel), ptr)
     return vdir, ptr
 
 
@@ -376,22 +274,15 @@ def prune_layout_files(
 def rewrite_layout_pointer(slug_dir: str, rel: str, ptr: dict) -> None:
     """Atomically rewrite a rel's pointer in place (same version/dir,
     updated commit record — e.g. recording an empty CDC batch)."""
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    _write_json_atomic(_pointer_path(slug_dir, rel), dict(ptr))
+    snapshot.write_json(_pointer_path(slug_dir, rel), dict(ptr))
 
 
 def tombstone_layout_dir(path: str) -> None:
     """Phase-1 GC: mark a displaced version dir for collection after
-    grace. Underscore-prefixed so parquet scans of the dir (a reader
-    still inside its grace window) never see it as data."""
-    if not os.path.isdir(path):
-        return
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    _write_json_atomic(
-        os.path.join(path, "_superseded.json"), {"ts": time.time()}
-    )
+    grace (the underscore-prefixed version tombstone, invisible to
+    parquet scans of the dir by a reader still inside its grace
+    window)."""
+    snapshot.tombstone(path, snapshot.VERSION_TOMBSTONE)
 
 
 def gc_layout_versions(slug_dir: str) -> None:
@@ -413,38 +304,32 @@ def gc_layout_versions(slug_dir: str) -> None:
       rather than deleted. A pointer FILE that exists but fails to
       parse makes us skip the rel entirely (fail-safe: never delete on
       ambiguity);
-    - legacy r16 undo dirs (``*_old-*`` with a bare ``superseded.json``)
+    - legacy r16 undo dirs (``*_old-*`` with a bare layer tombstone)
       are collected past the same grace.
     """
     if not os.path.isdir(slug_dir):
         return
-    grace = float(os.environ.get("PYCAIM_LAYOUT_GC_GRACE", "900"))
+    grace = snapshot.grace("PYCAIM_LAYOUT_GC_GRACE")
     now = time.time()
     for d in os.listdir(slug_dir):
         p = os.path.join(slug_dir, d)
         if not os.path.isdir(p):
             continue
-        tomb = os.path.join(p, "_superseded.json")
-        legacy_tomb = os.path.join(p, "superseded.json")
-        if os.path.exists(tomb) or ("_old-" in d and os.path.exists(legacy_tomb)):
+        vtomb = snapshot.tombstoned(p, snapshot.VERSION_TOMBSTONE)
+        if vtomb or ("_old-" in d and snapshot.tombstoned(p)):
             if _gc_retained(slug_dir, p, d):
                 continue  # pinned snapshot (time travel): never collect
             m = _VDIR_RE.match(d)
-            if m and os.path.exists(tomb):
+            if m and vtomb:
                 ptr = load_layout_pointer(slug_dir, m.group(1))
                 if ptr is not None and ptr.get("dir") == d:
                     # The rel's pointer still references this dir: the
                     # tombstone is debris from an interrupted cleanup —
                     # resurrect the LIVE state rather than collect it.
-                    os.remove(tomb)
+                    snapshot.resurrect(p, snapshot.VERSION_TOMBSTONE)
                     continue
-            src = tomb if os.path.exists(tomb) else legacy_tomb
-            try:
-                with open(src) as f:
-                    ts = float(json.load(f).get("ts", now))
-            except (OSError, ValueError, TypeError):
-                continue  # unreadable tombstone: leave for a later pass
-            if now - ts > grace:
+            name = snapshot.VERSION_TOMBSTONE if vtomb else snapshot.TOMBSTONE
+            if snapshot.expired(p, grace, now, name):
                 shutil.rmtree(p, ignore_errors=True)
             continue
         if d.endswith("_stage") or "_feed_tmp_" in d:
@@ -547,14 +432,9 @@ def layout_history(slug_dir: str, rel: str) -> list[dict]:
             if v == ptr["version"]
             else os.path.join(slug_dir, f"{rel}_v{v}")
         )
-        rec_path = os.path.join(path, "_commit.json")
-        if not os.path.exists(rec_path):
-            continue
-        try:
-            with open(rec_path) as f:
-                out.append(json.load(f))
-        except (OSError, ValueError):
-            continue
+        rec = snapshot.read_json(os.path.join(path, "_commit.json"))
+        if rec is not None:
+            out.append(rec)
     return out
 
 
@@ -596,8 +476,6 @@ def publish_slug_commit(
     commit flip leaves the commit's versions readable until the next
     locked writer completes or re-derives the motion. Caller MUST hold
     the slug write lock."""
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
     old = load_slug_commit(slug_dir)
     rec = {
         "commit": (old["commit"] + 1) if old else 1,
@@ -605,21 +483,16 @@ def publish_slug_commit(
         "rels": {r: int(v) for r, v in rels.items()},
         **(extra or {}),
     }
-    _write_json_atomic(os.path.join(slug_dir, "slug_commit.json"), rec)
+    snapshot.write_json(os.path.join(slug_dir, "slug_commit.json"), rec)
     return rec
 
 
 def load_slug_commit(slug_dir: str) -> dict | None:
     """Parse ``slug_commit.json``; None if absent/unparseable."""
-    path = os.path.join(slug_dir, "slug_commit.json")
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            rec = json.load(f)
-        return rec if isinstance(rec.get("rels"), dict) else None
-    except (OSError, ValueError, AttributeError):
-        return None
+    rec = snapshot.read_json(os.path.join(slug_dir, "slug_commit.json"))
+    if isinstance(rec, dict) and isinstance(rec.get("rels"), dict):
+        return rec
+    return None
 
 
 def resolve_slug_commit(slug_dir: str) -> dict:

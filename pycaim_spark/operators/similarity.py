@@ -20,6 +20,8 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from pycaim_spark.operators import snapshot
+
 try:
     from pyspark import cloudpickle as _cloudpickle
 except ImportError:  # pragma: no cover
@@ -801,222 +803,35 @@ _INDEX_PARAM_KEYS = (
 _INDEX_ALGO_VERSION = 3
 
 
-def _codes_version(store_dir: str) -> int | None:
-    """Parse the coded-corpus snapshot pointer ``codes_current.json``
-    (r16, VERDICT r15 #3 — the same pointer-commit the minhash store
-    base got). ``None`` = legacy/unbuilt store."""
-    import json
-    import os
-
-    path = os.path.join(store_dir, "codes_current.json")
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            v = json.load(f).get("version")
-        return v if isinstance(v, int) else None
-    except (OSError, ValueError, AttributeError):
-        return None
-
-
-def _codes_path(store_dir: str) -> str:
-    """Resolve the live coded-corpus dir: ``codes_v{N}`` behind the
-    pointer, or the legacy unversioned ``codes`` until the next write
-    path migrates the store. The resolved dir only ever GROWS (appends
-    add part files); replacement happens by publishing a new version and
-    flipping the pointer, so a reader's resolved path stays valid for
-    ``$PYCAIM_STORE_GC_GRACE`` seconds after any retrain."""
-    import os
-
-    v = _codes_version(store_dir)
-    if v is not None:
-        return os.path.join(store_dir, f"codes_v{v}")
-    return os.path.join(store_dir, "codes")
+#: The IVF-PQ codes store's on-disk shape (commit protocol:
+#: operators/snapshot.py): the coded corpus ``codes_v{N}`` (neighbor_id,
+#: cell, codes, recon_norm) behind ``codes_current.json`` =
+#: ``{"version": N, "del_folded": [...], "app_folded": [...]}``, delete
+#: layers ``codes_deletes/<key>/ids`` and append layers
+#: ``codes_append/<key>/codes``. The trained centroids and codebooks live
+#: in the ``index.npz`` sidecar.
+CODES_STORE = snapshot.Store(
+    "codes_current.json",
+    ("codes",),
+    (
+        snapshot.Layers("codes_deletes", "ids", "del_folded"),
+        snapshot.Layers("codes_append", "codes", "app_folded"),
+    ),
+)
 
 
-def _recover_codes(store_dir: str) -> None:
-    """Write-path reconciliation for the coded corpus (caller holds the
-    store write lock): delete uncommitted ``codes_v{>current}`` strays
-    and legacy ``codes_next``/``codes_old*`` swap scaffolding, grace-
-    collect tombstoned old versions, and MIGRATE a legacy unversioned
-    ``codes`` dir to ``codes_v0`` + pointer. Since r18 (VERDICT r17
-    #6) the migration LINK-ASSEMBLES v0 from the live ``codes`` dir
-    (complete-or-absent: temp dir + atomic rename) and tombstones the
-    legacy dir after the pointer commits — the pre-r18 rename of live
-    files, and its documented FileNotFoundException window for a
-    mid-materialization legacy reader, is gone: the reader's resolved
-    path stays on disk for the grace period like any displaced
-    version."""
-    import json
-    import os
-    import shutil
-    import time
-
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    if not os.path.isdir(store_dir):
-        return
-    v = _codes_version(store_dir)
-    grace = float(os.environ.get("PYCAIM_STORE_GC_GRACE", "900"))
-    now = time.time()
-    for sib in os.listdir(store_dir):
-        path = os.path.join(store_dir, sib)
-        if sib == "codes_next" or sib.startswith("codes_old") \
-                or sib.endswith(".assembling"):
-            shutil.rmtree(path, ignore_errors=True)
-            continue
-        if sib == "codes" and v is not None:
-            # Legacy dir on a MIGRATED store (r18 link-assembly keeps
-            # it for stale readers): tombstone idempotently — a crash
-            # between pointer commit and tombstone re-lays here — and
-            # collect past grace like any displaced version.
-            tomb = os.path.join(path, "_superseded.json")
-            if not os.path.exists(tomb):
-                _write_json_atomic(tomb, {"ts": now})
-            else:
-                try:
-                    with open(tomb) as f:
-                        ts = float(json.load(f).get("ts", now))
-                    if now - ts > grace:
-                        shutil.rmtree(path, ignore_errors=True)
-                except (OSError, ValueError, TypeError):
-                    pass
-            continue
-        if sib.startswith("codes_v"):
-            try:
-                n = int(sib[len("codes_v"):])
-            except ValueError:
-                continue
-            if v is not None and n > v:
-                shutil.rmtree(path, ignore_errors=True)
-            elif v is not None and n < v:
-                tomb = os.path.join(path, "_superseded.json")
-                if not os.path.exists(tomb):
-                    _write_json_atomic(tomb, {"ts": now})
-                else:
-                    try:
-                        with open(tomb) as f:
-                            ts = float(json.load(f).get("ts", now))
-                        if now - ts > grace:
-                            shutil.rmtree(path, ignore_errors=True)
-                    except (OSError, ValueError, TypeError):
-                        pass
-    # Layer swap scaffolding + two-phase retirement (r18) for BOTH
-    # layer families (delete layers, append layers), mirroring the
-    # minhash store's layer recovery: roll a complete orphaned
-    # ``<key>.next`` forward, drop incomplete ones, re-lay missing
-    # ``.old-`` tombstones, collect tombstoned layers past grace.
-    for root, marker in (("codes_deletes", "ids"),
-                         ("codes_append", "codes")):
-        layer_root = os.path.join(store_dir, root)
-        if not os.path.isdir(layer_root):
-            continue
-        # One pointer parse per root (it cannot change under the write
-        # lock the caller holds), not one per layer key.
-        folded = set(
-            _codes_del_manifest(store_dir)
-            if root == "codes_deletes"
-            else _codes_app_manifest(store_dir)
+def _codes_path(store_dir: str, ptr: dict | None = None) -> str:
+    """The committed coded-corpus dir ``codes_v{N}`` (of ``ptr``, or of
+    a fresh pointer parse). Immutable: a retrain or vacuum publishes a
+    new version, and this one outlives the flip by
+    ``$PYCAIM_STORE_GC_GRACE`` seconds."""
+    ptr = ptr or CODES_STORE.pointer(store_dir)
+    if ptr is None:
+        raise FileNotFoundError(
+            f"IVF-PQ store at {store_dir} has no committed codes "
+            "(codes_current.json) — build the index first"
         )
-        for k in os.listdir(layer_root):
-            d = os.path.join(layer_root, k)
-            if k.endswith(".next"):
-                layer = d[: -len(".next")]
-                if not os.path.exists(layer) and os.path.exists(
-                    os.path.join(d, marker, "_SUCCESS")
-                ):
-                    os.rename(d, layer)
-                else:
-                    shutil.rmtree(d, ignore_errors=True)
-                continue
-            tomb = os.path.join(d, "superseded.json")
-            if (".old-" in k or k in folded) and not os.path.exists(
-                tomb
-            ):
-                # .old- swap debris, or a layer the pointer has folded
-                # whose tombstone write was lost to a crash: re-lay it
-                # (the app_folded skip in `_codes_frame` keeps reads
-                # correct meanwhile).
-                _write_json_atomic(tomb, {"ts": now})
-            elif os.path.exists(tomb):
-                try:
-                    with open(tomb) as f:
-                        ts = float(json.load(f).get("ts", now))
-                    if now - ts > grace:
-                        shutil.rmtree(d, ignore_errors=True)
-                except (OSError, ValueError, TypeError):
-                    pass
-        try:
-            if not os.listdir(layer_root):
-                os.rmdir(layer_root)
-        except OSError:
-            pass
-    # Legacy append manifest (pre-r18 appends added part files to the
-    # live version dir with ``append_keys.json`` as the replay guard —
-    # those rows are physically in the base already): fold the keys
-    # into the pointer's ``app_folded`` and retire the file, so
-    # redelivered keys keep no-op'ing under the new scheme.
-    def _fold_legacy_append_manifest():
-        legacy_app = os.path.join(store_dir, "append_keys.json")
-        if not os.path.exists(legacy_app):
-            return
-        try:
-            with open(legacy_app) as f:
-                keys = list(json.load(f))
-        except (OSError, ValueError):
-            return
-        ptr_path = os.path.join(store_dir, "codes_current.json")
-        with open(ptr_path) as f:
-            doc = json.load(f)
-        prior = list(doc.get("app_folded", ()))
-        doc["app_folded"] = prior + [k for k in keys if k not in prior]
-        _write_json_atomic(ptr_path, doc)
-        os.remove(legacy_app)
-
-    if v is not None:
-        _fold_legacy_append_manifest()
-    # Pointer-less stores: crash-idempotent forward completion (mirrors
-    # the minhash base migration). A legacy ``codes`` dir is
-    # LINK-ASSEMBLED into ``codes_v0`` (r18 — never renamed); a
-    # COMPLETE pointer-less v0 (crashed migration — or a build that
-    # crashed between its v0 write and its pointer commit) gets the
-    # pointer it was about to receive; an INCOMPLETE one is a build
-    # stray — delete it, the next build re-derives. The pre-fix rule
-    # deleted every pointer-less codes_v* dir, which turned a crash
-    # between the migration and its pointer write into DATA LOSS of
-    # the only coded corpus.
-    if v is None:
-        legacy = os.path.join(store_dir, "codes")
-        v0 = os.path.join(store_dir, "codes_v0")
-        stray = v0 + ".assembling"
-        shutil.rmtree(stray, ignore_errors=True)
-        if os.path.exists(legacy) and not os.path.exists(v0):
-            os.makedirs(stray)
-            for fn in os.listdir(legacy):
-                full = os.path.join(legacy, fn)
-                if not os.path.isfile(full):
-                    continue
-                try:
-                    os.link(full, os.path.join(stray, fn))
-                except OSError:
-                    shutil.copy2(full, os.path.join(stray, fn))
-            os.rename(stray, v0)
-        if os.path.exists(os.path.join(v0, "_SUCCESS")):
-            _write_json_atomic(
-                os.path.join(store_dir, "codes_current.json"),
-                {"version": 0},
-            )
-            # The legacy manifest's keys are physically in the base —
-            # fold them NOW, or the very next append of a redelivered
-            # key would layer a duplicate slice on top.
-            _fold_legacy_append_manifest()
-            if os.path.isdir(legacy):
-                _write_json_atomic(
-                    os.path.join(legacy, "_superseded.json"),
-                    {"ts": now},
-                )
-        elif os.path.exists(v0):
-            shutil.rmtree(v0, ignore_errors=True)
+    return CODES_STORE.version_dir(store_dir, "codes", ptr["version"])
 
 
 def ivf_pq_index_build(
@@ -1029,38 +844,24 @@ def ivf_pq_index_build(
     iters: int = 10,
     seed: int = 42,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Build (or reuse) a PERSISTED IVF-PQ index at ``store_dir``: the
-    coded corpus as parquet plus an ``index.npz`` sidecar holding the
-    trained centroids/codebooks. Idempotent — if both artifacts exist the
-    build is skipped entirely, which is the deployment shape: at 100 TB
-    the index is built once (or incrementally per ingest slice) and every
+    """Build (or reuse) a PERSISTED IVF-PQ index at ``store_dir``
+    (``CODES_STORE``): the coded corpus plus an ``index.npz`` sidecar
+    holding the trained centroids/codebooks. Idempotent — if both exist
+    the build is skipped, which is the deployment shape: at 100 TB the
+    index is built once (or incrementally per ingest slice) and every
     query run reads 8-byte codes instead of re-encoding the corpus.
-    Training is seeded, so a rebuild reproduces the same index bit-(and
-    code-)identically. The build hyperparameters are persisted alongside
-    the arrays and re-validated on reuse: a call with different
+    Training is seeded, so a rebuild reproduces the same index. The
+    build hyperparameters are persisted alongside the arrays and
+    re-validated on reuse: a call with different
     n_cells/m/k_centroids/sample_size/iters/seed than the stored build
-    raises instead of silently serving the stale index (ADVICE r9); a
-    sidecar with no persisted params at all is likewise refused (ADVICE
-    r10). Concurrency (r15, hardened r16 — VERDICT r15 #3): write paths
-    serialize on the store's flock (`_store_write_lock`, double-checked
-    reuse after acquiring it), the npz sidecar and append manifest are
-    written atomically (temp + fsync + rename), and a retrain writes the
-    re-coded corpus as a NEW VERSION (``codes_v{N+1}``) committed by an
-    atomic flip of the ``codes_current.json`` pointer — the superseded
-    version is tombstoned in place and collected after
-    ``$PYCAIM_STORE_GC_GRACE`` seconds, so a lockless reader that
-    resolved the old version keeps every file it resolved for the whole
-    grace period (r15's rename-instant residual is gone; this is the
-    same snapshot-pointer commit the minhash store base uses). Returns
-    (centroids, codebooks)."""
-    import os
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
+    raises instead of silently serving the stale index; a sidecar with
+    no persisted params at all is likewise refused. A (re)build writes
+    the coded corpus as the next version and commits it as a REBUILD
+    under the store write lock (double-checked reuse after acquiring
+    it): the store then holds exactly ``emb``, so previously appended
+    slices AND pending delete intents are retired (deletion intents
+    target the OLD membership — purge the source corpus too, per
+    ivf_pq_index_delete's scope note). Returns (centroids, codebooks)."""
     params = {
         "n_cells": n_cells,
         "m": m,
@@ -1077,18 +878,13 @@ def ivf_pq_index_build(
         arrays on a match, None when a (re)build is needed, ValueError on
         params-less or hyperparameter-mismatched stores. Read-only, so
         the common serve path stays lock-free (np reads the whole npz
-        eagerly, and atomic replace means it is never torn)."""
-        if not (
-            os.path.exists(npz)
-            and os.path.exists(
-                os.path.join(_codes_path(store_dir), "_SUCCESS")
-            )
-        ):
+        eagerly, and the atomic write means it is never torn)."""
+        if not (CODES_STORE.built(store_dir) and os.path.exists(npz)):
             return None
         with np.load(npz) as idx:
             if "params" not in idx:
-                # ADVICE r10: a params-less sidecar is indistinguishable
-                # from a stale index — refuse rather than silently serve.
+                # A params-less sidecar is indistinguishable from a stale
+                # index — refuse rather than silently serve.
                 raise ValueError(
                     f"IVF-PQ index at {store_dir} has no persisted build "
                     "hyperparameters, so the requested parameters cannot "
@@ -1116,16 +912,14 @@ def ivf_pq_index_build(
     got = _try_reuse()
     if got is not None:
         return got
-    with _store_write_lock(store_dir):
+    with snapshot.write_lock(store_dir):
+        CODES_STORE.reconcile(store_dir)
         # Double-checked: a concurrent build may have completed while we
         # waited on the lock — seeded training is deterministic, so
         # re-validating and serving its result is exact, not approximate.
         got = _try_reuse()
         if got is not None:
             return got
-        # Reconcile crash strays, grace-collect tombstoned versions, and
-        # migrate a legacy unversioned store to the pointer layout.
-        _recover_codes(store_dir)
         sample = np.stack(
             emb.orderBy("vec_id")
             .limit(sample_size)
@@ -1139,69 +933,26 @@ def ivf_pq_index_build(
         codebooks = _pq_train(
             sample - centroids[s_cells], m, k_centroids, iters, seed
         )
-        # A (re)build resets the store to exactly the passed corpus:
-        # the pointer flip below supersedes previously appended slices
-        # AND pending delete intents, so BOTH layer families are
-        # tombstoned (a surviving append layer would re-enter reads
-        # and its manifest key would no-op a re-delivered slice the
-        # rebuild just discarded — the r12 bug class; a surviving
-        # DELETE layer would silently filter, and the next vacuum
-        # physically remove, vectors the retrain corpus intentionally
-        # contains — deletion intents target the OLD membership and do
-        # not survive a retrain: purge the source corpus instead, per
-        # ivf_pq_index_delete's scope note) and the fresh pointer
-        # carries no app_folded/del_folded. Legacy append_keys.json is
-        # retired the same way.
-        for layer in _codes_append_dirs(store_dir) + _codes_delete_dirs(
-            store_dir
-        ):
-            _write_json_atomic(
-                os.path.join(layer, "superseded.json"),
-                {"ts": time.time()},
-            )
-        manifest = os.path.join(store_dir, "append_keys.json")
-        if os.path.exists(manifest):
-            os.remove(manifest)
-        old_v = _codes_version(store_dir)
-        new_v = 0 if old_v is None else old_v + 1
-        new_codes = os.path.join(store_dir, f"codes_v{new_v}")
+        v = CODES_STORE.next_version(store_dir)
         _ivf_pq_encode(emb, centroids, codebooks).write.mode(
             "overwrite"
-        ).parquet(new_codes)
-        os.makedirs(store_dir, exist_ok=True)
-        tmp = npz + ".tmp"
-        with open(tmp, "wb") as f:
-            np.savez(
+        ).parquet(CODES_STORE.version_dir(store_dir, "codes", v))
+        # Commit, then publish the matching sidecar. A reader between
+        # the two can pair the new codes with the old npz for one load —
+        # benign for the reuse check (params re-validate), and after a
+        # crash there a retrain-triggered rebuild still sees the old
+        # algo_version and retrains again.
+        CODES_STORE.rebuild(store_dir, v)
+        snapshot.write_atomic(
+            npz,
+            lambda f: np.savez(
                 f,
                 centroids=centroids,
                 codebooks=codebooks,
                 params=np.array([params[key] for key in _INDEX_PARAM_KEYS]),
-            )
-            # Same durability discipline as _write_json_atomic (ADVICE
-            # r15): os.replace of an unsynced tmp can surface an empty or
-            # torn npz after power loss, breaking the temp+rename
-            # atomicity claim this sidecar family documents.
-            f.flush()
-            os.fsync(f.fileno())
-        # Commit: flip the codes pointer (atomic), publish the matching
-        # sidecar, tombstone the superseded version for grace collection.
-        # A reader interleaving between the two publishes can pair the
-        # old npz with the new codes for one load — benign for a reuse
-        # check (params re-validate) and the only sub-instant left; the
-        # old VERSION DIR itself now outlives any such reader by the
-        # grace period instead of being deleted under it.
-        _write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"),
-            {"version": new_v},
+            ),
+            binary=True,
         )
-        os.replace(tmp, npz)
-        if old_v is not None:
-            old_dir = os.path.join(store_dir, f"codes_v{old_v}")
-            if os.path.isdir(old_dir):
-                _write_json_atomic(
-                    os.path.join(old_dir, "_superseded.json"),
-                    {"ts": time.time()},
-                )
     return centroids, codebooks
 
 
@@ -1213,159 +964,49 @@ def ivf_pq_index_append(
     """Append new vectors to a PERSISTED IVF-PQ index WITHOUT retraining:
     encode them with the STORED centroids/codebooks — the standard
     production practice (the codebooks model the corpus distribution, not
-    its membership; periodic retraining is a separate offline job). r18:
-    the slice commits as an APPEND LAYER ``codes_append/<key>/codes``
-    (one atomic dir rename — the key is the idempotence unit), read by
-    `_codes_frame` alongside the base and folded into the next codes
-    version by `ivf_pq_codes_vacuum`, which records the key in the
-    pointer's ``app_folded`` manifest. This retires the pre-r18 shape
-    (part files appended into the live version dir + a separate
-    ``append_keys.json``), whose documented crash window — codes
-    written, manifest write lost — double-indexed a redelivered slice:
-    now a crash before the rename leaves only an invisible ``.next``
-    stray, and a crash after it leaves a committed layer whose key
-    redelivery overwrites in place (write-aside), never duplicates.
-    Runs under the store write lock; legacy manifests are folded into
-    the pointer by `_recover_codes` on the next write path. The ANN
+    its membership; periodic retraining is a separate offline job). The
+    slice commits as the keyed APPEND LAYER ``codes_append/<key>/codes``
+    (write-aside — the key is the idempotence unit, so a redelivered key
+    replaces its layer and never duplicates it), read by `_codes_frame`
+    alongside the base and folded into the next codes version by
+    `ivf_pq_codes_vacuum`, which records the key in the pointer's
+    ``app_folded`` manifest; replaying a folded key is a no-op. The ANN
     half of the daily ingest loop — new documents become searchable as
     soon as their slice is appended, no index rebuild."""
-    import os
-    import shutil
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
-    with _store_write_lock(store_dir):
-        _recover_codes(store_dir)
-        if ingest_key in _codes_app_manifest(store_dir):
+    with snapshot.write_lock(store_dir):
+        CODES_STORE.reconcile(store_dir)
+        if ingest_key in CODES_STORE.manifest(
+            CODES_STORE.pointer(store_dir), "codes_append"
+        ):
             return  # already folded into a committed codes version
         with np.load(os.path.join(store_dir, "index.npz")) as idx:
             centroids, codebooks = idx["centroids"], idx["codebooks"]
-        # r18: the slice lands as an APPEND LAYER
-        # ``codes_append/<key>/codes`` committed by one atomic dir
-        # rename — the key IS the idempotence unit, so the pre-r18
-        # crash window (codes part files appended into the live
-        # version dir, manifest write lost to a crash → redelivery
-        # double-indexed the slice) is structurally gone. Readers
-        # union base + live layers (`_codes_frame`); a vacuum folds
-        # layers into the next codes version and records the key in
-        # the pointer's ``app_folded`` manifest. Redelivery of an
-        # unfolded key overwrites via write-aside, same as every
-        # layer family.
-        layer = os.path.join(store_dir, "codes_append", ingest_key)
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        _ivf_pq_encode(new_emb, centroids, codebooks).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(fresh, "codes"))
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"),
-                {"ts": time.time()},
-            )
-        os.rename(fresh, layer)
-
-
-def _codes_append_dirs(store_dir: str) -> list[str]:
-    """Live append layers of the coded corpus (r18):
-    ``codes_append/<key>/codes`` — complete and untombstoned."""
-    root = os.path.join(store_dir, "codes_append")
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        os.path.join(root, k)
-        for k in os.listdir(root)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(root, k, "codes", "_SUCCESS"))
-        and not os.path.exists(os.path.join(root, k, "superseded.json"))
-    )
-
-
-def _codes_app_manifest(store_dir: str) -> list[str]:
-    """Append keys a vacuum has folded into a committed codes version —
-    carried in ``codes_current.json`` as ``app_folded``."""
-    import json
-
-    path = os.path.join(store_dir, "codes_current.json")
-    if not os.path.exists(path):
-        return []
-    try:
-        with open(path) as f:
-            return list(json.load(f).get("app_folded", ()))
-    except (OSError, ValueError, AttributeError):
-        return []
+        CODES_STORE.write_layer(
+            store_dir, "codes_append", ingest_key,
+            lambda fresh: _ivf_pq_encode(new_emb, centroids, codebooks)
+            .write.mode("overwrite")
+            .parquet(os.path.join(fresh, "codes")),
+        )
 
 
 def _codes_frame(spark, store_dir: str):
-    """The live coded corpus: the pointed base version UNIONED with
-    every live append layer whose key the pointer has NOT folded — the
-    read view every stored probe and vacuum uses. The ``app_folded``
-    skip is load-bearing independently of the tombstones (same rule as
-    the minhash read view): a vacuum that crashed between its pointer
-    flip and its layer tombstoning leaves a folded layer looking live,
-    and unioning it against the base that already contains its rows
-    would double-count the slice."""
-    folded = set(_codes_app_manifest(store_dir))
-    coded = spark.read.parquet(_codes_path(store_dir))
-    for layer in _codes_append_dirs(store_dir):
-        if os.path.basename(layer) in folded:
-            continue
+    """The live coded corpus: the committed base version UNIONED with
+    every live append layer the pointer has NOT folded — the read view
+    every stored probe and vacuum uses. Base and skip set come from one
+    pointer parse. The ``app_folded`` skip matters independently of the
+    tombstones: a vacuum that crashed between its pointer flip and its
+    layer tombstoning leaves a folded layer looking live, and unioning
+    it against the base that already holds its rows would double-count
+    the slice."""
+    ptr = CODES_STORE.pointer(store_dir)
+    coded = spark.read.parquet(_codes_path(store_dir, ptr))
+    for layer in CODES_STORE.live_layers(
+        store_dir, "codes_append", skip=CODES_STORE.manifest(ptr, "codes_append")
+    ):
         coded = coded.unionByName(
             spark.read.parquet(os.path.join(layer, "codes"))
         )
     return coded
-
-
-def _codes_delete_dirs(store_dir: str) -> list[str]:
-    """Live delete layers of the coded corpus (r18):
-    ``codes_deletes/<key>/ids`` — complete and untombstoned, same
-    liveness rule as every layer family in the repo."""
-    root = os.path.join(store_dir, "codes_deletes")
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        os.path.join(root, k)
-        for k in os.listdir(root)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(root, k, "ids", "_SUCCESS"))
-        and not os.path.exists(os.path.join(root, k, "superseded.json"))
-    )
-
-
-def _codes_deleted_ids(spark, store_dir: str):
-    """Union of live delete layers' ids as a one-column
-    ``neighbor_id`` DataFrame (the codes table's id column), or None.
-    Bounded by deletions since the last vacuum."""
-    dirs = _codes_delete_dirs(store_dir)
-    if not dirs:
-        return None
-    out = None
-    for d in dirs:
-        ids = spark.read.parquet(os.path.join(d, "ids"))
-        out = ids if out is None else out.unionByName(ids)
-    return out.distinct()
-
-
-def _codes_del_manifest(store_dir: str) -> list[str]:
-    """Delete keys a vacuum has applied physically — the
-    replay-idempotency manifest, carried in ``codes_current.json``."""
-    import json
-
-    path = os.path.join(store_dir, "codes_current.json")
-    if not os.path.exists(path):
-        return []
-    try:
-        with open(path) as f:
-            return list(json.load(f).get("del_folded", ()))
-    except (OSError, ValueError, AttributeError):
-        return []
 
 
 def ivf_pq_index_delete(
@@ -1375,126 +1016,65 @@ def ivf_pq_index_delete(
     delete_key: str,
     id_col: str = "vec_id",
 ) -> None:
-    """DELETE vectors from a persisted IVF-PQ index (r18) — the ANN
-    twin of `operators/dedup.minhash_signature_store_delete`: after
-    this commit the vectors are never returned as neighbors. The ids
-    land as a keyed delete layer (write-aside + rename, ADVICE r15
-    discipline); probes apply them logically (anti-join the codes
-    scan), `ivf_pq_codes_vacuum` applies them physically and records
-    the key in the pointer's ``del_folded`` manifest so a replayed
-    delete is a no-op. Note the scope: this guards the STORE — a
-    later RETRAIN re-encodes whatever corpus it is given, so purge the
-    source corpus too (the layout's CDC delete) before retraining."""
-    import shutil
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
-    with _store_write_lock(store_dir):
-        _recover_codes(store_dir)
-        if delete_key in _codes_del_manifest(store_dir):
+    """DELETE vectors from a persisted IVF-PQ index — the ANN twin of
+    `operators/dedup.minhash_signature_store_delete`: after this commit
+    the vectors are never returned as neighbors. The ids land as the
+    keyed delete layer ``codes_deletes/<key>/ids`` (write-aside); probes
+    apply them logically (anti-join the codes scan),
+    `ivf_pq_codes_vacuum` applies them physically and records the key in
+    the pointer's ``del_folded`` manifest so a replayed delete is a
+    no-op. Note the scope: this guards the STORE — a later RETRAIN
+    re-encodes whatever corpus it is given, so purge the source corpus
+    too (the layout's CDC delete) before retraining."""
+    with snapshot.write_lock(store_dir):
+        CODES_STORE.reconcile(store_dir)
+        if delete_key in CODES_STORE.manifest(
+            CODES_STORE.pointer(store_dir), "codes_deletes"
+        ):
             return
-        layer = os.path.join(store_dir, "codes_deletes", delete_key)
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        (
-            vec_ids.select(
+        CODES_STORE.write_layer(
+            store_dir, "codes_deletes", delete_key,
+            lambda fresh: vec_ids.select(
                 F.col(id_col).cast("long").alias("neighbor_id")
             )
             .distinct()
             .write.mode("overwrite")
-            .parquet(os.path.join(fresh, "ids"))
+            .parquet(os.path.join(fresh, "ids")),
         )
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"),
-                {"ts": time.time()},
-            )
-        os.rename(fresh, layer)
 
 
 def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
-    """The codes COMPACTION (r18): publish ``codes_v{N+1}`` = (base ∪
-    live append layers) minus every live delete layer's ids, flip the
-    pointer with BOTH applied manifests folded inside (``app_folded``
-    append keys, ``del_folded`` delete keys — replay of either is a
-    no-op), then tombstone the displaced version and the applied
-    layers (two-phase grace GC, collected by `_recover_codes` on later
-    write passes). A lockless reader that resolved version N keeps its
-    files for the grace period — the same snapshot-commit contract as
-    every store."""
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
-    with _store_write_lock(store_dir):
-        _recover_codes(store_dir)
-        del_layers = _codes_delete_dirs(store_dir)
-        app_layers = _codes_append_dirs(store_dir)
+    """The codes COMPACTION: publish ``codes_v{N+1}`` = (base ∪ live
+    append layers) minus every live delete layer's ids, flip the pointer
+    with BOTH applied manifests folded inside (``app_folded`` append
+    keys, ``del_folded`` delete keys — replay of either is a no-op),
+    then tombstone the displaced version and the applied layers
+    (`CODES_STORE.fold`; collected by later write passes past grace). A
+    lockless reader that resolved version N keeps its files for the
+    grace period — the same snapshot-commit contract as every store."""
+    with snapshot.write_lock(store_dir):
+        CODES_STORE.reconcile(store_dir)
+        del_layers = CODES_STORE.live_layers(store_dir, "codes_deletes")
+        app_layers = CODES_STORE.live_layers(store_dir, "codes_append")
         if not del_layers and not app_layers:
             return
-        v = _codes_version(store_dir)
-        if v is None:
+        ptr = CODES_STORE.pointer(store_dir)
+        if ptr is None:
             raise RuntimeError(
                 f"IVF-PQ store at {store_dir} has pending layers but no "
                 "committed codes pointer — build the index first"
             )
         cur = _codes_frame(spark, store_dir)
-        if del_layers:
-            dels = None
-            for d in del_layers:
-                ids = spark.read.parquet(os.path.join(d, "ids"))
-                dels = ids if dels is None else dels.unionByName(ids)
-            cur = cur.join(
-                F.broadcast(dels.distinct()), "neighbor_id", "left_anti"
-            )
+        dels = CODES_STORE.deleted_ids(spark, store_dir, "codes_deletes")
+        if dels is not None:
+            cur = cur.join(F.broadcast(dels), "neighbor_id", "left_anti")
         cur.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"codes_v{v + 1}")
+            CODES_STORE.version_dir(store_dir, "codes", ptr["version"] + 1)
         )
-
-        def _keys(layers):
-            return [
-                os.path.basename(d)
-                for d in sorted(
-                    layers, key=lambda p: (os.path.getmtime(p), p)
-                )
-            ]
-
-        prior_del = _codes_del_manifest(store_dir)
-        prior_app = _codes_app_manifest(store_dir)
-        doc = {"version": v + 1}
-        del_folded = prior_del + [
-            k for k in _keys(del_layers) if k not in prior_del
-        ]
-        app_folded = prior_app + [
-            k for k in _keys(app_layers) if k not in prior_app
-        ]
-        if del_folded:
-            doc["del_folded"] = del_folded
-        if app_folded:
-            doc["app_folded"] = app_folded
-        _write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"), doc
+        CODES_STORE.fold(
+            store_dir, ptr,
+            {"codes_deletes": del_layers, "codes_append": app_layers},
         )
-        now = time.time()
-        _write_json_atomic(
-            os.path.join(
-                store_dir, f"codes_v{v}", "_superseded.json"
-            ),
-            {"ts": now},
-        )
-        for d in del_layers + app_layers:
-            _write_json_atomic(
-                os.path.join(d, "superseded.json"), {"ts": now}
-            )
 
 
 def ivf_pq_topk_stored(
@@ -1523,12 +1103,12 @@ def ivf_pq_topk_stored(
     centroids, codebooks = ivf_pq_index_build(
         emb, store_dir, n_cells, m, k_centroids, sample_size, iters, seed
     )
-    # r18 read view: base version ∪ live append layers; pending
-    # deletions apply logically until a vacuum folds them — a deleted
-    # vector filtered from the codes scan can never be a candidate,
-    # whatever version the pointer serves.
-    coded = _codes_frame(emb.sparkSession, store_dir)
-    dels = _codes_deleted_ids(emb.sparkSession, store_dir)
+    # Read view: base version ∪ live append layers; pending deletions
+    # apply logically until a vacuum folds them — a deleted vector
+    # filtered from the codes scan can never be a candidate.
+    spark = emb.sparkSession
+    coded = _codes_frame(spark, store_dir)
+    dels = CODES_STORE.deleted_ids(spark, store_dir, "codes_deletes")
     if dels is not None:
         coded = coded.join(F.broadcast(dels), "neighbor_id", "left_anti")
     return _ivf_pq_query(

@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 
 from pycaim_spark.catalog import load_table, register_temp_views
 from pycaim_spark.functions.exact import cents, fsum
+from pycaim_spark.operators import snapshot
 from pycaim_spark.registry import register
 
 
@@ -207,9 +208,8 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     (tools/make_scaled_sf.py) produce a fresh slug instead of serving the
     previous corpus.
 
-    Concurrency + GC (round 13, hardened round 14 per ADVICE r13, reusing
-    the signature store's pattern — operators/dedup.py
-    `_store_write_lock`): the WARM path (``_SUCCESS`` present and the
+    Concurrency + GC (round 13, hardened round 14 per ADVICE r13; the
+    lock and tombstones are operators/snapshot.py's): the WARM path (``_SUCCESS`` present and the
     table already in this session's catalog) is lock-free — the slug is
     content-addressed by (sf_dir, buckets, per-file fingerprint), so a
     catalog entry with this name can only ever point at these exact
@@ -239,11 +239,6 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     the lock (same caveat as the signature store)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-    from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
@@ -260,7 +255,6 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
         name = f"tpch_b_{table}_{slug}"
         slug_dir = os.path.join(layout_root, slug)
         path = os.path.join(slug_dir, table)
-        tomb = os.path.join(slug_dir, "superseded.json")
         # Lock-free warm fast path (ADVICE r13): content-addressed slug +
         # immutable files once _SUCCESS exists, so no lock is needed to
         # re-serve an attach this session already made. A visible
@@ -273,12 +267,12 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
         # no longer tombstone each other.
         if (
             os.path.exists(os.path.join(path, "_SUCCESS"))
-            and not os.path.exists(tomb)
+            and not snapshot.tombstoned(slug_dir)
             and spark.catalog.tableExists(name)
         ):
             out[table] = spark.table(name)
             continue
-        with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+        with _layout_root_lock(layout_root), snapshot.write_lock(slug_dir):
             if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 # Cold build. A concurrent builder that lost the lock race
                 # lands in the re-attach branch below instead (the
@@ -293,7 +287,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
                     .option("path", path)
                     .saveAsTable(name)
                 )
-                _write_json_atomic(
+                snapshot.write_json(
                     os.path.join(slug_dir, "source.json"),
                     {"sf_dir": abs_sf, "table": table, "buckets": buckets,
                      "fp": fp},
@@ -317,7 +311,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
                 # r13: marker-less slugs were otherwise never collected).
                 marker = os.path.join(slug_dir, "source.json")
                 if not os.path.exists(marker):
-                    _write_json_atomic(
+                    snapshot.write_json(
                         marker,
                         {"sf_dir": abs_sf, "table": table,
                          "buckets": buckets, "fp": fp},
@@ -328,10 +322,17 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
             # fingerprint, so its files are not stale for this caller,
             # and leaving the tombstone would let a later GC pass delete
             # a slug this catalog entry actively serves.
-            if os.path.exists(tomb):
-                os.remove(tomb)
+            snapshot.resurrect(slug_dir)
         out[table] = spark.table(name)
     return out["lineitem"], out["orders"]
+
+
+def _layout_root_lock(layout_root: str) -> snapshot.write_lock:
+    """The builders' lock over the whole layout root (order: root, then
+    slug). Its lock file stays INSIDE the root (``.lock_builds``): the
+    root is never collected, and the scratch dir's top level keeps
+    holding only dirs."""
+    return snapshot.write_lock(os.path.join(layout_root, "builds"))
 
 
 def _gc_superseded_layouts(
@@ -348,27 +349,16 @@ def _gc_superseded_layouts(
     $PYCAIM_LAYOUT_GC_GRACE seconds (default 900). The mtime age test is
     what keeps an in-progress concurrent build safe from the marker-less
     sweep: its slug dir is seconds old."""
-    import json
     import shutil
     import time
 
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    grace = float(os.environ.get("PYCAIM_LAYOUT_GC_GRACE", "900"))
+    grace = snapshot.grace("PYCAIM_LAYOUT_GC_GRACE")
     now = time.time()
     for sib in os.listdir(layout_root):
         sib_dir = os.path.join(layout_root, sib)
         if sib == keep_slug or not os.path.isdir(sib_dir):
             continue
-        marker = os.path.join(sib_dir, "source.json")
-        tomb = os.path.join(sib_dir, "superseded.json")
-        meta = None
-        if os.path.exists(marker):
-            try:
-                with open(marker) as f:
-                    meta = json.load(f)
-            except (OSError, ValueError):
-                meta = None
+        meta = snapshot.read_json(os.path.join(sib_dir, "source.json"))
         # Phase 1: tombstone same-(sf_dir, table) slugs whose source
         # FINGERPRINT is stale (r16). Bucket count alone is NOT staleness:
         # a 512-bucket probe layout over the same bytes is a live SIBLING
@@ -385,7 +375,7 @@ def _gc_superseded_layouts(
             meta is not None
             and (meta.get("sf_dir"), meta.get("table")) == (abs_sf, table)
             and (fp is None or meta.get("fp") is None or meta["fp"] != fp)
-            and not os.path.exists(tomb)
+            and not snapshot.tombstoned(sib_dir)
         ):
             # Every catalog table this slug ever attached carries the
             # slug as its name suffix (tpch_b_/tpch_ia_/tpch_ic_/
@@ -402,16 +392,13 @@ def _gc_superseded_layouts(
                 t = row.tableName
                 if t.endswith(f"_{sib}") and not row.isTemporary:
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _write_json_atomic(tomb, {"ts": now})
+            snapshot.tombstone(sib_dir)
             continue  # freshly tombstoned: full grace ahead of it
-        # Phase 2: delete past-grace tombstones and aged marker-less dirs.
+        # Phase 2: delete past-grace tombstones and aged marker-less dirs
+        # (an unreadable tombstone is left for a later pass).
         ts = None
-        if os.path.exists(tomb):
-            try:
-                with open(tomb) as f:
-                    ts = float(json.load(f).get("ts", now))
-            except (OSError, ValueError, TypeError):
-                ts = None  # unreadable tombstone: leave for a later pass
+        if snapshot.tombstoned(sib_dir):
+            ts = snapshot.tombstone_ts(sib_dir)
         elif meta is None:
             try:
                 ts = os.path.getmtime(sib_dir)
@@ -425,15 +412,10 @@ def _gc_superseded_layouts(
             # tombstone at motion end; an abandoned slug collects on a
             # later pass). Blocking here would invert the root→slug
             # lock order and risk a cycle; try-lock cannot.
-            from pycaim_spark.operators.layout import (
-                remove_slug_lock_file,
-                slug_write_lock,
-            )
-
-            with slug_write_lock(sib_dir, blocking=False) as lk:
+            with snapshot.write_lock(sib_dir, blocking=False) as lk:
                 if lk.acquired:
                     shutil.rmtree(sib_dir, ignore_errors=True)
-                    remove_slug_lock_file(sib_dir)
+                    snapshot.remove_lock_file(sib_dir)
 
 
 #: Session-side memo of which version dir each layout catalog table is
@@ -572,11 +554,6 @@ def _incremental_orderkey_layout(
     versa. Returns (lineitem_df, orders_df) for the requested state."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-    from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
@@ -621,7 +598,7 @@ def _incremental_orderkey_layout(
         if (
             os.path.exists(want_success)
             and os.path.exists(append_marker)
-            and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+            and not snapshot.tombstoned(slug_dir)
             and (
                 not compacted
                 or cptr is None
@@ -632,7 +609,7 @@ def _incremental_orderkey_layout(
             out[table] = spark.table(want_name)
             continue
         full = load_table(spark, sf_dir, table)
-        with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+        with _layout_root_lock(layout_root), snapshot.write_lock(slug_dir):
             if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 import shutil
 
@@ -707,7 +684,7 @@ def _incremental_orderkey_layout(
                     .option("path", path)
                     .saveAsTable(name)
                 )
-                _write_json_atomic(
+                snapshot.write_json(
                     os.path.join(slug_dir, "source.json"),
                     {"sf_dir": abs_sf, "table": f"{table}#{ns}",
                      "buckets": buckets, "fp": fp},
@@ -736,7 +713,7 @@ def _incremental_orderkey_layout(
                     .option("path", path)
                     .saveAsTable(name)
                 )
-                _write_json_atomic(append_marker, {"appended": True})
+                snapshot.write_json(append_marker, {"appended": True})
             if compacted:
                 cdir, cptr = resolve_layout_rel(slug_dir, crel)
                 if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
@@ -795,9 +772,7 @@ def _incremental_orderkey_layout(
             # call re-derived from the CURRENT fingerprint is valid by
             # construction — clear any tombstone so GC can't delete a
             # layout the catalog is actively serving.
-            tomb = os.path.join(slug_dir, "superseded.json")
-            if os.path.exists(tomb):
-                os.remove(tomb)
+            snapshot.resurrect(slug_dir)
         out[table] = spark.table(want_name)
     return out.get("lineitem"), out.get("orders")
 
@@ -967,7 +942,6 @@ def _upserted_orderkey_layout(
         publish_layout_version,
         resolve_layout_rel,
         rewrite_layout_pointer,
-        slug_write_lock,
         tombstone_layout_dir,
     )
     from pycaim_spark.operators.merge import (
@@ -1036,7 +1010,7 @@ def _upserted_orderkey_layout(
     if (
         _current(ptr)
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
         and _ATTACHED.get(uname) == cur_dir
         and spark.catalog.tableExists(uname)
     ):
@@ -1044,7 +1018,7 @@ def _upserted_orderkey_layout(
 
     stage = os.path.join(slug_dir, f"orders_u{suffix}_stage")
     sname = f"tpch_iu{suffix}_stage_orders_{slug}"
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         if not _current(ptr):
@@ -1270,9 +1244,7 @@ def _upserted_orderkey_layout(
             (ptr or {}).get("ddl") or base_ddl, key,
             final_rb["to"] if final_complete else buckets,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return lib, spark.table(uname)
 
 
@@ -1327,7 +1299,6 @@ def _upsert_stream_inplace(
         publish_layout_version,
         resolve_layout_rel,
         rewrite_layout_pointer,
-        slug_write_lock,
         tombstone_layout_dir,
     )
     from pycaim_spark.operators.merge import (
@@ -1372,7 +1343,7 @@ def _upsert_stream_inplace(
         and ptr.get("batch") is None
         and not ptr.get("rebucket")
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
         and _ATTACHED.get(tname) == cur_dir
         and spark.catalog.tableExists(tname)
     ):
@@ -1386,7 +1357,7 @@ def _upsert_stream_inplace(
     legacy_pending = os.path.join(
         slug_dir, f"upsertstream_pending{suffix}_orders.json"
     )
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         # Stage leftovers are unpublished by construction.
         spark.sql(f"DROP TABLE IF EXISTS {sname}")
@@ -1505,9 +1476,7 @@ def _upsert_stream_inplace(
             spark, tname, cur_dir,
             (ptr or {}).get("ddl") or base_ddl, key, buckets,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return spark.table(tname)
 
 
@@ -1770,10 +1739,9 @@ def _heal_or_invalidate(slug_dir, rel, resolve):
     from pycaim_spark.operators.layout import (
         load_layout_pointer,
         rewrite_layout_pointer,
-        slug_write_lock,
     )
 
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         try:
             return resolve()
         except FileNotFoundError:
@@ -2036,7 +2004,6 @@ def _cdc_sink_apply_micro_batch(
         gc_layout_versions,
         publish_layout_version,
         resolve_layout_rel,
-        slug_write_lock,
         tombstone_layout_dir,
     )
     from pycaim_spark.operators.merge import (
@@ -2052,7 +2019,7 @@ def _cdc_sink_apply_micro_batch(
         return  # empty micro-batch
     spec_by_key = {s[0]: s for s in specs}
     order = {s[0]: i for i, s in enumerate(specs)}
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         applied = list((ptr or {}).get("applied") or [])
@@ -2138,11 +2105,9 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
     import hashlib
     import shutil
 
-    from pycaim_spark.operators.dedup import _write_json_atomic
     from pycaim_spark.operators.layout import (
         gc_layout_versions,
         resolve_layout_rel,
-        slug_write_lock,
     )
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -2184,7 +2149,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
         and ptr.get("batch") is None
         and not ptr.get("rebucket")
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
         # A missing checkpoint means the stream's cursor is gone — the
         # warm claim "every file was processed" can't be made from the
         # pointer alone, so run the stream: it re-creates the
@@ -2197,20 +2162,12 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
     ):
         return spark.table(tname)
 
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         applied = _applied(ptr)
         hist = [a["batch"] for a in applied]
-        cur_spec = None
-        if os.path.exists(feed_spec):
-            try:
-                import json as _json
-
-                with open(feed_spec) as f:
-                    cur_spec = _json.load(f)
-            except (OSError, ValueError):
-                cur_spec = None
+        cur_spec = snapshot.read_json(feed_spec)
         if (
             (hist and hist != specs[: len(hist)])
             or (
@@ -2269,7 +2226,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
                 shutil.move(part, dst)
                 shutil.rmtree(tmp, ignore_errors=True)
                 os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
-            _write_json_atomic(feed_spec, specs)
+            snapshot.write_json(feed_spec, specs)
         feed_schema = spark.read.parquet(
             os.path.join(feed, "batch-0.parquet")
         ).schema
@@ -2296,15 +2253,13 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
     )
     q.awaitTermination()
 
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         _attach_rel_table(
             spark, tname, cur_dir,
             (ptr or {}).get("ddl") or base_ddl, key, buckets,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return spark.table(tname)
 
 
@@ -2541,7 +2496,6 @@ def _split_orderkey_layout(
         gc_layout_versions,
         publish_layout_version,
         resolve_layout_rel,
-        slug_write_lock,
         tombstone_layout_dir,
     )
     from pycaim_spark.operators.merge import bucket_files
@@ -2588,7 +2542,7 @@ def _split_orderkey_layout(
         _rb(ptr).get("done") == want_done
         and _rb(ptr).get("to") == n_to
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
         and _ATTACHED.get(tname) == cur_dir
         and spark.catalog.tableExists(tname)
     ):
@@ -2596,7 +2550,7 @@ def _split_orderkey_layout(
 
     stage = os.path.join(slug_dir, f"orders_split{suffix}_stage")
     sname = f"tpch_rb{suffix}_stage_orders_{slug}"
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         spark.sql(f"DROP TABLE IF EXISTS {sname}")
         shutil.rmtree(stage, ignore_errors=True)
@@ -2665,9 +2619,7 @@ def _split_orderkey_layout(
             if os.path.isdir(old_dir) and old_dir != cur_dir:
                 tombstone_layout_dir(old_dir)
         _attach(cur_dir, done)
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return spark.table(tname)
 
 
@@ -2805,7 +2757,6 @@ def _coalesce_orderkey_layout(
         gc_layout_versions,
         publish_layout_version,
         resolve_layout_rel,
-        slug_write_lock,
         tombstone_layout_dir,
     )
     from pycaim_spark.operators.merge import bucket_files
@@ -2842,7 +2793,7 @@ def _coalesce_orderkey_layout(
         and state.get("to") == buckets
         and sorted(state.get("done", [])) == want_done
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
         and _ATTACHED.get(tname) == cur_dir
         and spark.catalog.tableExists(tname)
     ):
@@ -2850,7 +2801,7 @@ def _coalesce_orderkey_layout(
 
     stage = os.path.join(slug_dir, f"orders_coalesce{suffix}_stage")
     sname = f"tpch_rb{suffix}_cstage_orders_{slug}"
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         spark.sql(f"DROP TABLE IF EXISTS {sname}")
         shutil.rmtree(stage, ignore_errors=True)
@@ -2928,9 +2879,7 @@ def _coalesce_orderkey_layout(
             spark, tname, cur_dir, base_ddl, key,
             buckets if complete else n_from, bucketed=complete,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return spark.table(tname)
 
 
@@ -3002,15 +2951,10 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
     one). Returns (slug_dir, ddl)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import (
         gc_layout_versions,
         publish_layout_version,
         resolve_layout_rel,
-        slug_write_lock,
     )
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -3033,10 +2977,10 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
     if (
         ptr is not None
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
     ):
         return slug_dir, ddl
-    with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+    with _layout_root_lock(layout_root), snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         if not (
@@ -3059,7 +3003,7 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
                 extra={"batch": None, "ddl": ddl},
                 stats_cols=("o_orderdate", "o_orderkey"),
             )
-            _write_json_atomic(
+            snapshot.write_json(
                 os.path.join(slug_dir, "source.json"),
                 {"sf_dir": abs_sf, "table": f"orders#{ns}",
                  "buckets": files, "fp": fp},
@@ -3067,9 +3011,7 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
             _gc_superseded_layouts(
                 spark, layout_root, slug, abs_sf, f"orders#{ns}", fp
             )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return slug_dir, ddl
 
 
@@ -3170,15 +3112,10 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
     Returns (slug_dir, ddl)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import (
         gc_layout_versions,
         publish_layout_version,
         resolve_layout_rel,
-        slug_write_lock,
     )
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -3201,10 +3138,10 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
     if (
         ptr is not None
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not snapshot.tombstoned(slug_dir)
     ):
         return slug_dir, ddl
-    with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+    with _layout_root_lock(layout_root), snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         if not (
@@ -3250,7 +3187,7 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
                 extra={"batch": None, "ddl": ddl},
                 stats_cols=("o_custkey", "o_orderdate", "o_orderkey"),
             )
-            _write_json_atomic(
+            snapshot.write_json(
                 os.path.join(slug_dir, "source.json"),
                 {"sf_dir": abs_sf, "table": f"orders#{ns}",
                  "buckets": files, "fp": fp},
@@ -3258,9 +3195,7 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
             _gc_superseded_layouts(
                 spark, layout_root, slug, abs_sf, f"orders#{ns}", fp
             )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return slug_dir, ddl
 
 
@@ -3359,11 +3294,6 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
     hash folds BOTH source fingerprints. Returns (slug_dir, slug)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-    from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
     layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
@@ -3380,11 +3310,9 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
         os.path.exists(os.path.join(slug_dir, f"{t}_c", "_SUCCESS"))
         for t in ("orders", "lineitem")
     )
-    if done and not os.path.exists(
-        os.path.join(slug_dir, "superseded.json")
-    ):
+    if done and not snapshot.tombstoned(slug_dir):
         return slug_dir, slug
-    with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+    with _layout_root_lock(layout_root), snapshot.write_lock(slug_dir):
         for table, key in (
             ("orders", "o_orderkey"), ("lineitem", "l_orderkey"),
         ):
@@ -3403,7 +3331,7 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
                 .saveAsTable(tmp_name)
             )
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        _write_json_atomic(
+        snapshot.write_json(
             os.path.join(slug_dir, "source.json"),
             {"sf_dir": abs_sf, "table": "orders#mrc",
              "buckets": buckets, "fp": fps},
@@ -3411,9 +3339,7 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
         _gc_superseded_layouts(
             spark, layout_root, slug, abs_sf, "orders#mrc", fps
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        snapshot.resurrect(slug_dir)
     return slug_dir, slug
 
 
@@ -3450,7 +3376,6 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
         publish_slug_commit,
         resolve_layout_rel,
         resolve_slug_commit,
-        slug_write_lock,
         tombstone_layout_dir,
     )
     from pycaim_spark.operators.merge import (
@@ -3467,7 +3392,7 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
             return resolve_slug_commit(slug_dir)
         except FileNotFoundError:
             pass  # a named version expired: re-derive under the lock
-    with slug_write_lock(slug_dir):
+    with snapshot.write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         rec = load_slug_commit(slug_dir)
         if rec is not None and rec.get("batch") == spec:

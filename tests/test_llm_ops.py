@@ -1050,13 +1050,56 @@ def test_store_append_compact_equals_fresh_rebuild(spark, tmp_path):
     # no longer a live layer; replaying the folded key is still a no-op
     import os
 
-    from pycaim_spark.operators.dedup import _store_layer_dirs
-    assert _store_layer_dirs(store) == []
+    from pycaim_spark.operators.dedup import SIG_STORE
+    assert SIG_STORE.live_layers(store, "append") == []
     assert os.path.exists(
         os.path.join(store, "append", "day1", "superseded.json")
     )
     minhash_signature_store_append(spark, store, accepted, "day1")
-    assert _store_layer_dirs(store) == []
+    assert SIG_STORE.live_layers(store, "append") == []
+
+
+def test_store_rebuild_retires_live_layers(spark, tmp_path):
+    """A MinHash rebuild (the committed version lost its ``_SUCCESS``)
+    resets the store to exactly the passed corpus, like an IVF-PQ
+    retrain: a live append layer must be retired with it, or the layered
+    probe keeps matching a document the rebuilt corpus does not hold."""
+    import os
+
+    from pycaim_spark.operators.dedup import (
+        SIG_STORE,
+        incremental_minhash_dedup_layered,
+        minhash_signature_store_append,
+        minhash_signature_store_build,
+    )
+
+    base = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        "doc_id long, text string",
+    )
+    s1 = spark.createDataFrame(
+        [(10, "first fresh slice with its very own vocabulary entirely")],
+        "doc_id long, text string",
+    )
+    probe = spark.createDataFrame(
+        [(30, "first fresh slice with its very own vocabulary entire")],
+        "doc_id long, text string",
+    )
+
+    def verdicts():
+        return {(r.doc_id, r.dup_of, r.is_new)
+                for r in incremental_minhash_dedup_layered(
+                    spark, store, probe).collect()}
+
+    store = str(tmp_path / "store")
+    minhash_signature_store_build(base, store)
+    minhash_signature_store_append(spark, store, s1, "day1")
+    assert verdicts() == {(30, 10, 0)}
+    os.remove(os.path.join(SIG_STORE.version_dir(store, "sets", 0), "_SUCCESS"))
+    minhash_signature_store_build(base, store)
+    assert SIG_STORE.pointer(store) == {"version": 1, "folded": []}
+    assert SIG_STORE.live_layers(store, "append") == []
+    assert verdicts() == {(30, None, 1)}
 
 
 def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
@@ -1073,9 +1116,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     import os
 
     from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _store_layer_dirs,
-        _versioned,
+        SIG_STORE,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1098,7 +1139,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     )
     store = str(tmp_path / "store")
     minhash_signature_store_build(base, store)
-    assert _load_pointer(store) == {"version": 0, "folded": []}
+    assert SIG_STORE.pointer(store) == {"version": 0, "folded": []}
     minhash_signature_store_append(spark, store, s1, "day1")
     expected = {(r.doc_id, r.dup_of, r.is_new)
                 for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
@@ -1107,37 +1148,35 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     # (a) crash BEFORE the pointer flip: a stray uncommitted v1 dir. The
     # probe IGNORES it (pointer still names v0; read-only, ADVICE r10);
     # the next write path deletes it.
-    os.makedirs(_versioned(store, "sets", 1))
+    os.makedirs(SIG_STORE.version_dir(store, "sets", 1))
     after_stray = {(r.doc_id, r.dup_of, r.is_new)
                    for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
     assert after_stray == expected
-    assert os.path.exists(_versioned(store, "sets", 1))
+    assert os.path.exists(SIG_STORE.version_dir(store, "sets", 1))
     minhash_signature_store_append(spark, store, s1, "day1")  # re-delivery
-    assert not os.path.exists(_versioned(store, "sets", 1))
+    assert not os.path.exists(SIG_STORE.version_dir(store, "sets", 1))
 
     # (b) crash AFTER the flip, before phase-1 GC: the commit landed —
     # pointer at v1 with day1 folded — but no tombstone was laid on the
     # old version or the folded layer.
-    import pycaim_spark.operators.dedup as dd
+    from pycaim_spark.operators import snapshot
 
-    def crashing_tombstones(store_dir, keys=None):
-        # recovery replays phase 1 with the pointer's folded set (empty
-        # pre-commit) — only the compaction's own call carries keys
-        if keys:
-            raise OSError("simulated crash post-commit")
+    def crashing_retire(self, store_dir, version, layers):
+        # the commit's phase-1 GC step, right after the pointer write
+        raise OSError("simulated crash post-commit")
 
-    monkeypatch.setattr(dd, "_tombstone_folded_layers", crashing_tombstones)
+    monkeypatch.setattr(snapshot.Store, "retire", crashing_retire)
     import pytest as _pytest
     with _pytest.raises(OSError, match="simulated crash"):
         minhash_signature_store_compact(spark, store)
     monkeypatch.undo()
-    ptr = _load_pointer(store)
+    ptr = SIG_STORE.pointer(store)
     assert ptr["version"] == 1 and ptr["folded"] == ["day1"]
     assert not os.path.exists(
         os.path.join(store, "append", "day1", "superseded.json")
     )
     assert not os.path.exists(
-        os.path.join(_versioned(store, "sets", 0), "_superseded.json")
+        os.path.join(SIG_STORE.version_dir(store, "sets", 0), "_superseded.json")
     )
 
     # A probe of the post-commit state reads the NEW base and skips the
@@ -1146,7 +1185,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     mid = {(r.doc_id, r.dup_of, r.is_new)
            for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
     assert mid == expected
-    assert os.path.exists(_versioned(store, "sets", 0))
+    assert os.path.exists(SIG_STORE.version_dir(store, "sets", 0))
 
     # The next WRITE-path operation reconciles: old version + folded
     # layer tombstoned (files intact for stale readers — two-phase GC),
@@ -1159,35 +1198,30 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
         os.path.join(store, "append", "day1", "superseded.json")
     )
     assert os.path.exists(
-        os.path.join(_versioned(store, "sets", 0), "_superseded.json")
+        os.path.join(SIG_STORE.version_dir(store, "sets", 0), "_superseded.json")
     )
-    assert os.path.exists(_versioned(store, "sets", 0))  # grace-protected
-    assert _store_layer_dirs(store) == []
+    assert os.path.exists(SIG_STORE.version_dir(store, "sets", 0))  # grace-protected
+    assert SIG_STORE.live_layers(store, "append") == []
     # the manifest survived the crash inside the pointer: replaying the
     # folded key is a no-op
     minhash_signature_store_append(spark, store, s1, "day1")
-    assert _store_layer_dirs(store) == []
-    assert _load_pointer(store)["version"] == 1  # no spurious recompact
+    assert SIG_STORE.live_layers(store, "append") == []
+    assert SIG_STORE.pointer(store)["version"] == 1  # no spurious recompact
 
 
 def test_store_legacy_migration_torn_journal_and_manifest_gc(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
-    """LEGACY-store handling after the r16 pointer re-base: a pre-r16
-    store (unversioned ``sets``/``buckets``, ``folded_keys.json``, maybe
-    a torn ``compact_journal.json`` + stray ``sets_next`` from a crashed
-    journal-era compaction) must (a) keep serving correct verdicts
-    through the read view's legacy fallback, treating the torn journal
-    as absent (ADVICE r10 doctrine: renames only started after an atomic
-    journal write, so old base + layers are intact), and (b) be healed
-    AND migrated in place by the next write path — base renamed to
-    ``*_v0``, manifest folded into the pointer, journal-era artifacts
-    gone. Plus the manifest GC contract: trim to the newest keep_last
-    keys; a retained key still no-ops on replay; a GC'd key re-appends
-    (the documented replay-window trade)."""
+    """The manifest GC contract on a store born with a pointer: a
+    compaction records the folded key in the pointer (verdicts
+    unchanged, the displaced version collected past grace); the GC trims
+    to the newest keep_last keys; a retained key still no-ops on replay;
+    a GC'd key re-appends as a fresh live layer (the documented
+    replay-window trade)."""
     import os
 
     from pycaim_spark.operators.dedup import (
+        SIG_STORE,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1218,60 +1252,15 @@ def test_store_legacy_migration_torn_journal_and_manifest_gc(
                 for r in incremental_minhash_dedup_layered(spark, store, probe).collect()}
     assert (30, 10, 0) in expected
 
-    # Down-migrate to the PRE-r16 on-disk layout (what a real legacy
-    # store looks like), plus a torn journal and a half-written _next
-    # dir from a crashed journal-era compaction.
-    import json as _json
-
-    from pycaim_spark.operators.dedup import _load_pointer
-    os.rename(os.path.join(store, "sets_v0"), os.path.join(store, "sets"))
-    os.rename(os.path.join(store, "buckets_v0"),
-              os.path.join(store, "buckets"))
-    os.remove(os.path.join(store, "current.json"))
-    with open(os.path.join(store, "folded_keys.json"), "w") as f:
-        _json.dump([], f)
-    with open(os.path.join(store, "compact_journal.json"), "w") as f:
-        f.write('["day1", "da')  # truncated mid-write
-    os.makedirs(os.path.join(store, "sets_next"))
-
-    # (a) probe: legacy fallback, torn journal treated as absent.
-    torn = {(r.doc_id, r.dup_of, r.is_new)
-            for r in incremental_minhash_dedup_layered(spark, store, probe).collect()}
-    assert torn == expected
-    assert os.path.exists(os.path.join(store, "compact_journal.json"))
-    assert _load_pointer(store) is None
-
-    # (b) the next write path heals AND migrates: journal-era
-    # artifacts gone, base versioned, manifest inside the pointer —
-    # verdicts unchanged (this compact then folds day1 into v1). r18:
-    # the legacy dirs are LINK-ASSEMBLED into v0 and kept TOMBSTONED
-    # for stale readers (never renamed), then grace-collected by a
-    # later write pass.
     minhash_signature_store_compact(spark, store)
-    for legacy in ("compact_journal.json", "sets_next",
-                   "folded_keys.json"):
-        assert not os.path.exists(os.path.join(store, legacy)), legacy
-    for legacy in ("sets", "buckets"):
-        p = os.path.join(store, legacy)
-        assert os.path.isdir(p), \
-            f"{legacy}: migration must not rename the live legacy dir"
-        assert os.path.exists(os.path.join(p, "_superseded.json"))
-    old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
-    os.environ["PYCAIM_STORE_GC_GRACE"] = "0"
-    try:
-        minhash_signature_store_compact(spark, store)  # no-op + GC pass
-    finally:
-        if old_grace is None:
-            os.environ.pop("PYCAIM_STORE_GC_GRACE", None)
-        else:
-            os.environ["PYCAIM_STORE_GC_GRACE"] = old_grace
-    for legacy in ("sets", "buckets"):
-        assert not os.path.exists(os.path.join(store, legacy)), \
-            f"{legacy}: tombstoned legacy dir collects past grace"
-    ptr = _load_pointer(store)
-    assert ptr == {"version": 1, "folded": ["day1"]}
+    assert SIG_STORE.pointer(store) == {"version": 1, "folded": ["day1"]}
     assert expected == {(r.doc_id, r.dup_of, r.is_new)
                         for r in incremental_minhash_dedup_layered(spark, store, probe).collect()}
+    with monkeypatch.context() as m:
+        m.setenv("PYCAIM_STORE_GC_GRACE", "0")
+        minhash_signature_store_compact(spark, store)  # no-op + GC pass
+    assert not os.path.exists(SIG_STORE.version_dir(store, "sets", 0)), \
+        "the displaced version collects past grace"
 
     # manifest GC: day1 was folded by the compact above; add + fold day2
     minhash_signature_store_append(spark, store, s2, "day2")
@@ -1279,14 +1268,13 @@ def test_store_legacy_migration_torn_journal_and_manifest_gc(
     assert minhash_store_manifest_gc(store, keep_last=5) == 0
     assert minhash_store_manifest_gc(store, keep_last=1) == 1  # drops day1
     # retained key still replay-safe; GC'd key re-appends as documented
-    from pycaim_spark.operators.dedup import _store_layer_dirs
     minhash_signature_store_append(spark, store, s2, "day2")
-    assert _store_layer_dirs(store) == []
+    assert SIG_STORE.live_layers(store, "append") == []
     minhash_signature_store_append(spark, store, s1, "day1")
     # the re-appended layer is LIVE again — a tombstone surviving from
     # its folded incarnation would both hide the rewrite from probes and
     # let a later GC pass delete it (r15 resurrection contract)
-    assert _store_layer_dirs(store) == [
+    assert SIG_STORE.live_layers(store, "append") == [
         os.path.join(store, "append", "day1")
     ]
     assert not os.path.exists(
@@ -1347,11 +1335,11 @@ def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
     # fold-order recency keeps day10 (the newest fold), drops day2 —
     # lexicographic recency would have kept day2
     assert _store_manifest_ordered(store) == ["day10"]
-    from pycaim_spark.operators.dedup import _store_layer_dirs
+    from pycaim_spark.operators.dedup import SIG_STORE
     minhash_signature_store_append(spark, store, s2, "day10")  # no-op
-    assert _store_layer_dirs(store) == []
+    assert SIG_STORE.live_layers(store, "append") == []
     minhash_signature_store_append(spark, store, s1, "day2")  # re-appends
-    assert _store_layer_dirs(store) == [
+    assert SIG_STORE.live_layers(store, "append") == [
         os.path.join(store, "append", "day2")
     ]
     # ADVICE r15: the re-append is WRITE-ASIDE — the folded-in-grace old
@@ -1390,7 +1378,7 @@ def test_store_two_phase_gc_protects_concurrent_readers(
     import os
 
     from pycaim_spark.operators.dedup import (
-        _store_layer_dirs,
+        SIG_STORE,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1414,7 +1402,7 @@ def test_store_two_phase_gc_protects_concurrent_readers(
     minhash_signature_store_append(spark, store, s1, "day1")
 
     # The concurrent reader: resolves its layer paths pre-compaction...
-    reader_layers = _store_layer_dirs(store)
+    reader_layers = SIG_STORE.live_layers(store, "append")
     assert reader_layers == [os.path.join(store, "append", "day1")]
 
     # ...then the compactor runs to completion in between...
@@ -1458,105 +1446,89 @@ def test_store_two_phase_gc_protects_concurrent_readers(
 
 
 def test_store_migration_crash_forward_completion(spark, tmp_path):
-    """r16 self-review: the legacy→versioned migration is two renames
-    plus a pointer write, and a crash BETWEEN them must neither strand
-    the store (pointer-less v0 dirs that the legacy read fallback can't
-    see) nor delete the only base. Recovery forward-completes: complete
-    pointer-less v0 dirs get the pointer they were about to receive
-    (true for a crashed migration AND for a build that crashed between
-    its v0 writes and its pointer commit — rename preserves _SUCCESS);
-    an incomplete pointer-less v0 pair is a build stray and is deleted.
-    Same contract for the IVF-PQ codes dir, where the pre-fix rule
-    deleted every pointer-less codes_v* — data loss."""
+    """A build that crashed after writing its version but before the
+    pointer commit, on both stores: the pointer-less version dirs were
+    never committed, so the next build deletes them and completes from
+    scratch, and its verdicts (MinHash) and ANN hits (IVF-PQ) equal a
+    clean build's. An incomplete pointer-less pair is the same case."""
     import os
-    import shutil
 
     import numpy as np
 
     from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _versioned,
+        SIG_STORE,
         incremental_minhash_dedup_layered,
-        minhash_signature_store_append,
         minhash_signature_store_build,
+    )
+    from pycaim_spark.operators.similarity import (
+        CODES_STORE,
+        ivf_pq_topk_stored,
     )
 
     base = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, "first fresh slice with its very own vocabulary entirely")],
+        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+         (2, "first fresh slice with its very own vocabulary entirely")],
         "doc_id long, text string",
     )
     probe = spark.createDataFrame(
         [(30, "first fresh slice with its very own vocabulary entire")],
         "doc_id long, text string",
     )
-    store = str(tmp_path / "store")
-    minhash_signature_store_build(base, store)
-    expected = {(r.doc_id, r.dup_of, r.is_new)
+
+    def verdicts(store):
+        return {(r.doc_id, r.dup_of, r.is_new)
                 for r in incremental_minhash_dedup_layered(
                     spark, store, probe).collect()}
 
-    # Crash state A: renames done, pointer write never happened.
+    clean = str(tmp_path / "clean")
+    minhash_signature_store_build(base, clean)
+    expected = verdicts(clean)
+    assert expected == {(30, 2, 0)}
+
+    # Crash state A: complete v0 written, pointer write never happened.
+    store = str(tmp_path / "store")
+    minhash_signature_store_build(base, store)
     os.remove(os.path.join(store, "current.json"))
-    # Crash state A': HALF-migrated — one dir still on its legacy name.
-    os.rename(_versioned(store, "sets", 0), os.path.join(store, "sets"))
-    minhash_signature_store_append(spark, store, s1, "day1")  # write path
-    assert _load_pointer(store) == {"version": 0, "folded": []}
+    minhash_signature_store_build(base, store)
+    assert SIG_STORE.pointer(store) == {"version": 0, "folded": []}
     assert os.path.exists(
-        os.path.join(_versioned(store, "sets", 0), "_SUCCESS"))
-    # Pre-append the probe doc was novel; after the healed store took
-    # the day-1 layer it dups against doc 10 — both reads prove the
-    # base survived the half-migration intact.
-    assert expected == {(30, None, 1)}
-    healed = {(r.doc_id, r.dup_of, r.is_new)
-              for r in incremental_minhash_dedup_layered(
-                  spark, store, probe).collect()}
-    assert healed == {(30, 10, 0)}
+        os.path.join(SIG_STORE.version_dir(store, "sets", 0), "_SUCCESS"))
+    assert verdicts(store) == expected
 
-    # Crash state B: incomplete pointer-less v0 pair = build stray.
+    # Crash state B: incomplete pointer-less v0 pair.
     store_b = str(tmp_path / "store_b")
-    os.makedirs(_versioned(store_b, "sets", 0))
-    os.makedirs(_versioned(store_b, "buckets", 0))
+    os.makedirs(SIG_STORE.version_dir(store_b, "sets", 0))
+    os.makedirs(SIG_STORE.version_dir(store_b, "buckets", 0))
     minhash_signature_store_build(base, store_b)
-    ptr = _load_pointer(store_b)
-    assert ptr is not None
+    ptr = SIG_STORE.pointer(store_b)
+    assert ptr == {"version": 0, "folded": []}
     assert os.path.exists(os.path.join(
-        _versioned(store_b, "sets", ptr["version"]), "_SUCCESS"))
+        SIG_STORE.version_dir(store_b, "sets", 0), "_SUCCESS"))
+    assert verdicts(store_b) == expected
 
-    # IVF-PQ codes: same window — pointer removed after a completed
-    # build must be forward-completed by the next write path, with the
-    # coded corpus intact (the pre-fix recovery deleted it here).
-    from pycaim_spark.operators.similarity import (
-        _codes_path,
-        _codes_version,
-        ivf_pq_index_append,
-        ivf_pq_index_build,
-    )
-
+    # IVF-PQ codes: the same crash, the same completion.
     rng = np.random.default_rng(11)
-    rows = [(i, [float(x) for x in v])
-            for i, v in enumerate(rng.normal(size=(40, 8)))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    ann = str(tmp_path / "ann")
-    ivf_pq_index_build(emb, ann, n_cells=4, m=4, k_centroids=8,
-                       sample_size=40)
-    n0 = spark.read.parquet(_codes_path(ann)).count()
-    os.remove(os.path.join(ann, "codes_current.json"))
-    extra = spark.createDataFrame(
-        [(100 + i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(5, 8)))],
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v])
+         for i, v in enumerate(rng.normal(size=(40, 8)))],
         "vec_id long, embedding array<float>",
     )
-    ivf_pq_index_append(extra, ann, "day1")
-    assert _codes_version(ann) == 0
-    from pycaim_spark.operators.similarity import _codes_frame
+    params = dict(n_cells=4, m=4, k_centroids=8, sample_size=40,
+                  n_queries=5, k=3)
 
-    assert _codes_frame(spark, ann).count() == n0 + 5
+    def hits(store):
+        return sorted(tuple(r) for r in ivf_pq_topk_stored(
+            emb, store, **params).collect())
 
-    shutil.rmtree(store_b, ignore_errors=True)
+    expected_hits = hits(str(tmp_path / "ann_clean"))
+    ann = str(tmp_path / "ann")
+    hits(ann)
+    os.remove(os.path.join(ann, "codes_current.json"))
+    assert hits(ann) == expected_hits
+    assert CODES_STORE.pointer(ann) == {"version": 0}
+    assert sorted(os.listdir(ann)) == [
+        "codes_current.json", "codes_v0", "index.npz"
+    ]
 
 
 def test_store_base_swap_mid_scan_reader_survives(
@@ -1575,8 +1547,8 @@ def test_store_base_swap_mid_scan_reader_survives(
     import os
 
     from pycaim_spark.operators.dedup import (
+        SIG_STORE,
         _store_read_view,
-        _versioned,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1628,7 +1600,7 @@ def test_store_base_swap_mid_scan_reader_survives(
     assert not os.path.exists(sets_v0)
     assert not os.path.exists(buckets_v0)
     assert os.path.exists(
-        os.path.join(_versioned(store, "sets", 1), "_SUCCESS")
+        os.path.join(SIG_STORE.version_dir(store, "sets", 1), "_SUCCESS")
     )
     assert fresh == {(r.doc_id, r.dup_of, r.is_new)
                      for r in incremental_minhash_dedup_layered(
@@ -1687,13 +1659,13 @@ def test_ivf_pq_index_append_concurrent_keys_both_survive(spark, tmp_path):
         t.join()
     assert not errs, errs
     from pycaim_spark.operators.similarity import (
-        _codes_app_manifest,
-        _codes_append_dirs,
+        CODES_STORE,
         _codes_frame,
     )
 
     assert sorted(
-        os.path.basename(d) for d in _codes_append_dirs(store)
+        os.path.basename(d)
+        for d in CODES_STORE.live_layers(store, "codes_append")
     ) == ["day1", "day2"], "both slices land as committed layers"
     n = _codes_frame(spark, store).count()
     assert n == base_n + 10
@@ -1707,11 +1679,11 @@ def test_ivf_pq_index_append_concurrent_keys_both_survive(spark, tmp_path):
     from pycaim_spark.operators.similarity import ivf_pq_codes_vacuum
 
     ivf_pq_codes_vacuum(spark, store)
-    assert sorted(_codes_app_manifest(store)) == ["day1", "day2"]
+    assert sorted(CODES_STORE.pointer(store)["app_folded"]) == ["day1", "day2"]
     assert spark.read.parquet(_codes_path(store)).count() == n
     for key in slices:
         ivf_pq_index_append(slices[key], store, key)
-    assert _codes_append_dirs(store) == []
+    assert CODES_STORE.live_layers(store, "codes_append") == []
     assert _codes_frame(spark, store).count() == n
 
 
@@ -1931,122 +1903,6 @@ def test_incremental_clusters_match_full_reclustering(spark):
     assert expected_remaps, "fixture must exercise the merge case"
 
 
-def test_legacy_store_mid_migration_reader_survives(spark, tmp_path):
-    """r18 (VERDICT r17 #6): the one-time legacy→versioned migration no
-    longer renames the live unversioned dirs — v0 is link-assembled and
-    the legacy dirs are tombstoned in place. A reader that resolved the
-    LEGACY paths and built its lazy plan BEFORE the migration must
-    materialize successfully AFTER it (this was the last documented
-    reader-visible rename window in the repo); the tombstoned legacy
-    dirs collect only past grace on a later write pass. Same contract
-    for the IVF-PQ codes migration."""
-    import os
-
-    import numpy as np
-
-    from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _store_read_view,
-        incremental_minhash_dedup_layered,
-        minhash_signature_store_append,
-        minhash_signature_store_build,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, "first fresh slice with its very own vocabulary entirely")],
-        "doc_id long, text string",
-    )
-    probe = spark.createDataFrame(
-        [(30, "first fresh slice with its very own vocabulary entire")],
-        "doc_id long, text string",
-    )
-    store = str(tmp_path / "store")
-    minhash_signature_store_build(base, store)
-    # Down-migrate to the pre-r16 legacy shape (hard links preserve the
-    # parquet bytes; the rename here is test scaffolding, not product
-    # code).
-    os.rename(os.path.join(store, "sets_v0"), os.path.join(store, "sets"))
-    os.rename(os.path.join(store, "buckets_v0"),
-              os.path.join(store, "buckets"))
-    os.remove(os.path.join(store, "current.json"))
-
-    # The stale reader: resolve the LEGACY view, build the lazy plan.
-    sets_p, buckets_p, skip = _store_read_view(store)
-    assert sets_p.endswith("/sets") and skip == set()
-    stale_df = incremental_minhash_dedup_layered(spark, store, probe)
-
-    # The next write path migrates (link-assemble v0 + pointer +
-    # legacy tombstones) and takes the day-1 layer.
-    minhash_signature_store_append(spark, store, s1, "day1")
-    assert _load_pointer(store) == {"version": 0, "folded": []}
-    for legacy in ("sets", "buckets"):
-        p = os.path.join(store, legacy)
-        assert os.path.isdir(p), "legacy dir must survive the migration"
-        assert os.path.exists(os.path.join(p, "_superseded.json"))
-
-    # The stale reader's materialization SUCCEEDS against the
-    # tombstoned-but-intact legacy paths — pre-r18 this exact line
-    # could take FileNotFoundException at the rename instant. The
-    # pre-migration view has no day-1 layer, so the probe is novel.
-    stale = {(r.doc_id, r.dup_of, r.is_new) for r in stale_df.collect()}
-    assert stale == {(30, None, 1)}
-    fresh = {(r.doc_id, r.dup_of, r.is_new)
-             for r in incremental_minhash_dedup_layered(
-                 spark, store, probe).collect()}
-    assert fresh == {(30, 10, 0)}
-
-    # Grace expiry: a later write pass collects the legacy dirs.
-    old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
-    os.environ["PYCAIM_STORE_GC_GRACE"] = "0"
-    try:
-        minhash_signature_store_append(spark, store, s1, "day1")  # no-op
-    finally:
-        if old_grace is None:
-            os.environ.pop("PYCAIM_STORE_GC_GRACE", None)
-        else:
-            os.environ["PYCAIM_STORE_GC_GRACE"] = old_grace
-    for legacy in ("sets", "buckets"):
-        assert not os.path.exists(os.path.join(store, legacy))
-
-    # IVF-PQ codes: same no-rename migration.
-    from pycaim_spark.operators.similarity import (
-        _codes_path,
-        _codes_version,
-        ivf_pq_index_append,
-        ivf_pq_index_build,
-    )
-
-    rng = np.random.default_rng(7)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(40, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    ann = str(tmp_path / "ann")
-    ivf_pq_index_build(emb, ann, n_cells=4, m=4, k_centroids=8,
-                       sample_size=40)
-    os.rename(os.path.join(ann, "codes_v0"), os.path.join(ann, "codes"))
-    os.remove(os.path.join(ann, "codes_current.json"))
-    legacy_codes = spark.read.parquet(_codes_path(ann))  # lazy, legacy
-    n0 = None
-    extra = spark.createDataFrame(
-        [(100 + i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(5, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    ivf_pq_index_append(extra, ann, "day1")  # migrates, then appends
-    assert _codes_version(ann) == 0
-    assert os.path.isdir(os.path.join(ann, "codes")), \
-        "codes migration must not rename the live legacy dir"
-    n0 = legacy_codes.count()  # stale reader materializes post-migration
-    assert n0 == 40
-    from pycaim_spark.operators.similarity import _codes_frame
-
-    assert _codes_frame(spark, ann).count() == 45
 
 
 def test_store_delete_lifecycle(spark, tmp_path):
@@ -2062,8 +1918,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
     import os
 
     from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _store_delete_dirs,
+        SIG_STORE,
         _store_read_view,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
@@ -2113,13 +1968,13 @@ def test_store_delete_lifecycle(spark, tmp_path):
     # Physical fold: sets and bucket arrays drop id 1; the delete key
     # lands in the pointer manifest; the layer is tombstoned.
     minhash_signature_store_compact(spark, store)
-    ptr = _load_pointer(store)
+    ptr = SIG_STORE.pointer(store)
     assert ptr["del_folded"] == ["gdpr1"]
     sets_path, buckets_path, _ = _store_read_view(store)
     assert spark.read.parquet(sets_path).filter("id = 1").count() == 0
     bk = spark.read.parquet(buckets_path)
     assert bk.filter(F.array_contains("ids", 1)).count() == 0
-    assert _store_delete_dirs(store) == [], "applied layer is retired"
+    assert SIG_STORE.live_layers(store, "deletes") == [], "applied layer is retired"
     assert verdicts(probe1) == {(30, None, 1)}
     assert verdicts(probe2) == {(31, 2, 0)}
 
@@ -2145,7 +2000,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
 
     # Replay AFTER the fold: manifest guard, no new layer dir appears.
     minhash_signature_store_delete(spark, store, dels, "gdpr1")
-    assert _store_delete_dirs(store) == []
+    assert SIG_STORE.live_layers(store, "deletes") == []
 
     # Append-then-delete composition: a doc appended as a layer and
     # then deleted must not match either (layer signatures are
@@ -2166,7 +2021,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
     )
     assert verdicts(probe10) == {(40, None, 1)}
     minhash_signature_store_compact(spark, store)
-    assert _load_pointer(store)["del_folded"] == ["gdpr1", "gdpr2"]
+    assert SIG_STORE.pointer(store)["del_folded"] == ["gdpr1", "gdpr2"]
     assert verdicts(probe10) == {(40, None, 1)}
     assert verdicts(probe2) == {(31, 2, 0)}
 
@@ -2197,10 +2052,8 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     import numpy as np
 
     from pycaim_spark.operators.similarity import (
-        _codes_delete_dirs,
-        _codes_del_manifest,
+        CODES_STORE,
         _codes_path,
-        _codes_version,
         ivf_pq_codes_vacuum,
         ivf_pq_index_delete,
         ivf_pq_topk_stored,
@@ -2244,15 +2097,15 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     assert not ({r.neighbor_id for r in filtered} & set(victims)), \
         "deleted vectors must never be returned as neighbors"
 
-    v0 = _codes_version(store)
+    v0 = CODES_STORE.pointer(store)["version"]
     ivf_pq_codes_vacuum(spark, store)
-    assert _codes_version(store) == v0 + 1
-    assert _codes_del_manifest(store) == ["gdpr-ann-1"]
+    assert CODES_STORE.pointer(store)["version"] == v0 + 1
+    assert CODES_STORE.pointer(store)["del_folded"] == ["gdpr-ann-1"]
     codes = spark.read.parquet(_codes_path(store))
     assert codes.filter(
         F.col("neighbor_id").isin([int(v) for v in victims])
     ).count() == 0
-    assert _codes_delete_dirs(store) == []
+    assert CODES_STORE.live_layers(store, "codes_deletes") == []
     after = ivf_pq_topk_stored(
         emb, store, n_cells=4, m=4, k_centroids=8, sample_size=60,
         n_queries=8, k=3,
@@ -2265,7 +2118,7 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
         spark.createDataFrame([(v,) for v in victims], "vec_id long"),
         "gdpr-ann-1",
     )
-    assert _codes_delete_dirs(store) == []
+    assert CODES_STORE.live_layers(store, "codes_deletes") == []
 
     # Two-phase retirement at zero grace: old version + layers collect.
     old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
@@ -2281,52 +2134,6 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     assert not os.path.isdir(os.path.join(store, "codes_deletes"))
 
 
-def test_ivf_pq_legacy_append_manifest_folds(spark, tmp_path):
-    """r18: a pre-r18 store whose appends live as part files in the
-    base version dir with ``append_keys.json`` as the replay guard must
-    keep its replay idempotence under the layer scheme — the next write
-    path folds the legacy keys into the pointer's app_folded and
-    retires the file, so a redelivered legacy key never lands as a
-    (duplicate) layer."""
-    import os
-
-    import numpy as np
-
-    from pycaim_spark.operators.dedup import _write_json_atomic
-    from pycaim_spark.operators.similarity import (
-        _codes_app_manifest,
-        _codes_append_dirs,
-        _codes_frame,
-        ivf_pq_index_append,
-        ivf_pq_index_build,
-    )
-
-    rng = np.random.default_rng(31)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(40, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    store = str(tmp_path / "ann")
-    ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8,
-                       sample_size=40)
-    n0 = _codes_frame(spark, store).count()
-    # Fabricate the legacy shape: day0's rows are (by construction of
-    # the pre-r18 path) already inside the base; only the manifest
-    # records the key.
-    _write_json_atomic(os.path.join(store, "append_keys.json"), ["day0"])
-
-    day0 = spark.createDataFrame(
-        [(200 + i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(5, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    ivf_pq_index_append(day0, store, "day0")  # redelivered legacy key
-    assert not os.path.exists(os.path.join(store, "append_keys.json"))
-    assert _codes_app_manifest(store) == ["day0"]
-    assert _codes_append_dirs(store) == [], \
-        "a folded legacy key must not re-land as a layer"
-    assert _codes_frame(spark, store).count() == n0
 
 
 def test_delete_candidate_slot_not_displaced(spark, tmp_path):
@@ -2367,104 +2174,6 @@ def test_delete_candidate_slot_not_displaced(spark, tmp_path):
     assert got == {(30, 2, 0)}, got
 
 
-def test_legacy_post_swap_journal_crash_preserves_folded_keys(
-    spark, tmp_path
-):
-    """r18 self-review #2: a LEGACY store whose journal-era compaction
-    crashed AFTER its renames consumed the *_next dirs (journal valid,
-    next absent, unversioned base = the folded content, folded layer
-    still on disk) must migrate with the journal's folded-keys
-    manifest intact — dropping it would leave the physically-folded
-    layer live with an empty skip set and double-count its rows. Also
-    covers the MID-rename state (one dir consumed, the other's next
-    still present): the per-dir next-if-complete-else-cur source rule
-    assembles the consistent post-fold pair."""
-    import json
-    import os
-    import shutil
-
-    from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _store_layer_dirs,
-        _store_read_view,
-        incremental_minhash_dedup_layered,
-        minhash_signature_store_append,
-        minhash_signature_store_build,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, "first fresh slice with its very own vocabulary entirely")],
-        "doc_id long, text string",
-    )
-    probe = spark.createDataFrame(
-        [(30, "first fresh slice with its very own vocabulary entire")],
-        "doc_id long, text string",
-    )
-    # Reference store F: the post-fold content (base ∪ s1 in the base).
-    folded_ref = str(tmp_path / "folded_ref")
-    minhash_signature_store_build(base.unionByName(s1), folded_ref)
-    # Reference store B: pre-fold base + the day1 append layer.
-    layer_ref = str(tmp_path / "layer_ref")
-    minhash_signature_store_build(base, layer_ref)
-    minhash_signature_store_append(spark, layer_ref, s1, "day1")
-    expected = {
-        (r.doc_id, r.dup_of, r.is_new)
-        for r in incremental_minhash_dedup_layered(
-            spark, folded_ref, probe
-        ).collect()
-    }
-    assert expected == {(30, 10, 0)}
-
-    def _mk_target(name, consume_buckets_rename):
-        t = str(tmp_path / name)
-        os.makedirs(t)
-        # sets rename CONSUMED: unversioned sets = folded content.
-        shutil.copytree(os.path.join(folded_ref, "sets_v0"),
-                        os.path.join(t, "sets"))
-        if consume_buckets_rename:
-            shutil.copytree(os.path.join(folded_ref, "buckets_v0"),
-                            os.path.join(t, "buckets"))
-        else:
-            # MID-rename: buckets_next (folded) still present, the
-            # unversioned buckets still pre-fold.
-            shutil.copytree(os.path.join(folded_ref, "buckets_v0"),
-                            os.path.join(t, "buckets_next"))
-            shutil.copytree(os.path.join(layer_ref, "buckets_v0"),
-                            os.path.join(t, "buckets"))
-        shutil.copytree(os.path.join(layer_ref, "append", "day1"),
-                        os.path.join(t, "append", "day1"))
-        with open(os.path.join(t, "compact_journal.json"), "w") as f:
-            json.dump(["day1"], f)
-        return t
-
-    for name, consumed in (("post_swap", True), ("mid_rename", False)):
-        t = _mk_target(name, consumed)
-        # The write path heals + migrates (the re-delivered folded key
-        # must no-op, NOT re-append).
-        minhash_signature_store_append(spark, t, s1, "day1")
-        ptr = _load_pointer(t)
-        assert ptr == {"version": 0, "folded": ["day1"]}, (name, ptr)
-        assert not os.path.exists(
-            os.path.join(t, "compact_journal.json")
-        ), name
-        assert _store_layer_dirs(t) == [], \
-            f"{name}: the folded layer must be tombstoned, not live"
-        sets_path, _bk, skip = _store_read_view(t)
-        ids = [r.id for r in spark.read.parquet(sets_path)
-               .select("id").collect()]
-        assert sorted(ids) == sorted(set(ids)) == [1, 10], \
-            f"{name}: folded base must hold each doc exactly once"
-        got = {
-            (r.doc_id, r.dup_of, r.is_new)
-            for r in incremental_minhash_dedup_layered(
-                spark, t, probe
-            ).collect()
-        }
-        assert got == expected, name
 
 
 def test_retrain_discards_pending_delete_layers(spark, tmp_path):
@@ -2478,7 +2187,7 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
     import numpy as np
 
     from pycaim_spark.operators.similarity import (
-        _codes_delete_dirs,
+        CODES_STORE,
         _codes_frame,
         ivf_pq_codes_vacuum,
         ivf_pq_index_build,
@@ -2505,7 +2214,7 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
         spark.createDataFrame([(v,) for v in victims], "vec_id long"),
         "stale-intent",
     )
-    assert _codes_delete_dirs(store)
+    assert CODES_STORE.live_layers(store, "codes_deletes")
 
     # RETRAIN: simulate the algo_version path (training code changed,
     # request unchanged) by doctoring the sidecar's stored version —
@@ -2526,7 +2235,7 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
     os.replace(npz_path + ".tmp", npz_path)
     ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8,
                        sample_size=60)
-    assert _codes_delete_dirs(store) == [], \
+    assert CODES_STORE.live_layers(store, "codes_deletes") == [], \
         "a retrain must discard pending delete intents"
     n = _codes_frame(spark, store).count()
     ivf_pq_codes_vacuum(spark, store)  # nothing pending: no-op

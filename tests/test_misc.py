@@ -123,3 +123,21 @@ def test_engine_env_surface_is_pinned():
             "STREAM_STATE_PARTITIONS",
         )
     }
+
+
+def test_store_protocol_lives_only_in_snapshot_kernel():
+    """One snapshot-store kernel (operators/snapshot.py): the flock, the
+    durable writer and the tombstone names appear nowhere else in the
+    engine, so a store or layout cannot grow a second lock class,
+    writer or tombstone spelling."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pycaim_spark"
+    pattern = re.compile(r"fcntl|os\.fsync|[\"']_?superseded\.json[\"']")
+    hits = {
+        str(path.relative_to(root))
+        for path in root.rglob("*.py")
+        if pattern.search(path.read_text())
+    }
+    assert hits == {"operators/snapshot.py"}

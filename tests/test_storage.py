@@ -223,10 +223,10 @@ def test_bucketed_layout_concurrent_build_regen_gc(
     import time
     from concurrent.futures import ThreadPoolExecutor
 
-    from pycaim_spark.operators.dedup import _store_write_lock
     from pycaim_spark.queries.advanced import (
         _bucketed_orderkey_layout,
         _layout_fingerprint,
+        _layout_root_lock,
     )
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -350,7 +350,7 @@ def test_bucketed_layout_concurrent_build_regen_gc(
 
         # (e) warm attach is lock-free: with the layout-root flock held
         # by "another process", the already-attached layout still serves.
-        with _store_write_lock(layout_root):
+        with _layout_root_lock(layout_root):
             with ThreadPoolExecutor(1) as ex:
                 fut = ex.submit(_bucketed_orderkey_layout, spark, corpus)
                 lib_warm, _ = fut.result(timeout=60)
@@ -2005,8 +2005,8 @@ def test_time_travel_heal_runs_under_flock_and_rechecks(tmp_path):
 
     from pycaim_spark.operators.layout import (
         load_layout_pointer,
-        slug_write_lock,
     )
+    from pycaim_spark.operators.snapshot import write_lock
     from pycaim_spark.queries.advanced import _heal_or_invalidate
 
     root = str(tmp_path)
@@ -2025,7 +2025,7 @@ def test_time_travel_heal_runs_under_flock_and_rechecks(tmp_path):
         return healed_dir
 
     def writer():
-        with slug_write_lock(slug_dir):
+        with write_lock(slug_dir):
             time.sleep(0.4)  # the heal must be blocked on the lock now
             os.makedirs(healed_dir)  # concurrent writer heals the rel
 
@@ -2118,7 +2118,7 @@ def test_concurrent_different_slug_cdc_streams(spark, sf_dir):
     import os
     import threading
 
-    from pycaim_spark.operators.layout import slug_write_lock
+    from pycaim_spark.operators.snapshot import write_lock
     from pycaim_spark.queries.advanced import (
         _UPSERT_B2_DEL,
         _UPSERT_DEL,
@@ -2153,7 +2153,7 @@ def test_concurrent_different_slug_cdc_streams(spark, sf_dir):
 
     # (a) hold slug cca's lock; slug ccb's stream must not block on it.
     cca_dir = os.path.join(_SCRATCH, "bucketed_tpch", slugs["cca"])
-    with slug_write_lock(cca_dir):
+    with write_lock(cca_dir):
         t = threading.Thread(target=run, args=("ccb",))
         t.start()
         t.join(timeout=300)
@@ -2263,8 +2263,8 @@ def test_multirel_commit_atomic_reader(spark, sf_dir):
         publish_layout_version,
         resolve_layout_rel,
         resolve_slug_commit,
-        slug_write_lock,
     )
+    from pycaim_spark.operators.snapshot import write_lock
     from pycaim_spark.queries.advanced import (
         _MULTIREL_DEL,
         _layout_fingerprint,
@@ -2299,7 +2299,7 @@ def test_multirel_commit_atomic_reader(spark, sf_dir):
     # (b) simulate a crashed two-rel motion: flip orders_c to a new
     # version WITHOUT rewriting the slug commit.
     cur_dir, ptr = resolve_layout_rel(slug_dir, "orders_c")
-    with slug_write_lock(slug_dir):
+    with write_lock(slug_dir):
         publish_layout_version(
             slug_dir, "orders_c", src_dir=cur_dir,
             skip_names=set(), staged_files=[],
@@ -2314,7 +2314,7 @@ def test_multirel_commit_atomic_reader(spark, sf_dir):
     old = os.environ.get("PYCAIM_LAYOUT_GC_GRACE")
     os.environ["PYCAIM_LAYOUT_GC_GRACE"] = "0"
     try:
-        with slug_write_lock(slug_dir):
+        with write_lock(slug_dir):
             gc_layout_versions(slug_dir)
             gc_layout_versions(slug_dir)
     finally:
